@@ -107,8 +107,17 @@ object Bench {
   // clean pairs; see the headline-section comment for the full rationale.
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
-    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+    if (s.isEmpty) Double.NaN
+    else if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
+  /** JSON number with `digits` decimals; NaN (no data) prints as null. */
+  private def num(x: Double, digits: Int): String =
+    if (x.isNaN) "null" else s"%.${digits}f".format(x)
+  private def nums(xs: Seq[Double], digits: Int): String =
+    xs.map(num(_, digits)).mkString("[", ",", "]")
+  /** The N-vs-4N fields every scaling JSON line carries. */
+  private def pairJson(p: PairStats, rate: String): String =
+    s""""${rate}_n":${num(p.rateA, 1)},"${rate}_4n":${num(p.rateB, 1)},"scaling_efficiency":${num(p.eff, 3)},"samples_n":${nums(p.samplesA, 1)},"samples_4n":${nums(p.samplesB, 1)},"pair_efficiencies":${nums(p.effs, 3)},"clean_pairs":${p.cleanPairs},"missing_pairs":${p.missingPairs}"""
   private def probeSec(): Double = {
     var acc = 0L; var i = 0L
     val t0 = System.nanoTime()
@@ -145,8 +154,11 @@ object Bench {
     }
     r
   }
-  /** Interleaved pinned sample pairs of `sample(cores, warm)`; returns
-    * (medianRateA, medianRateB, samplesA, samplesB, perPairEffs, cleanPairs).
+  /** Interleaved pinned sample pairs of `sample(cores, warm)`.
+    *
+    * A sample that produced no rate (a crashed or silent child JVM) is None:
+    * its pair is dropped from the rates and the efficiency median and
+    * counted in [[PairStats.missingPairs]] — never banked as a 0.0 rate.
     *
     * Bimodal low-mode re-run (bounded): BENCH.md's six same-day re-runs
     * diagnosed the residual pair-ratio spread as host-side contention
@@ -157,15 +169,26 @@ object Bench {
     * stays the median over ALL clean pairs — extra data, never selective
     * discarding, so a genuinely-low plan still reads low. */
   private val BimodalExtras = 3
-  private def pairLoop(sample: (String, Boolean) => Double,
-                       coresA: String, coresB: String, samples: Int)
-      : (Double, Double, Seq[Double], Seq[Double], Seq[Double], Int) = {
-    val a = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val b = scala.collection.mutable.ArrayBuffer.empty[Double]
+  /** [[pairLoop]]'s result: median rates over the selected pairs, every
+    * produced sample, the per-pair efficiencies, the clean-pair count and
+    * the pairs dropped for a missing rate. Medians are NaN (printed as JSON
+    * null) when no pair produced both rates. */
+  private final case class PairStats(rateA: Double, rateB: Double,
+                                     samplesA: Seq[Double], samplesB: Seq[Double],
+                                     effs: Seq[Double], cleanPairs: Int,
+                                     missingPairs: Int) {
+    def eff: Double = median(effs)
+  }
+  private def pairLoop(sample: (String, Boolean) => Option[Double],
+                       coresA: String, coresB: String, samples: Int): PairStats = {
+    val a = scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
+    val b = scala.collection.mutable.ArrayBuffer.empty[Option[Double]]
     val dirt = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def cleanIdx = dirt.indices.filter(dirt(_) <= CleanRatio)
+    def okIdx = dirt.indices.filter(j => a(j).isDefined && b(j).isDefined)
+    def cleanIdx = okIdx.filter(dirt(_) <= CleanRatio)
+    def effOf(j: Int) = b(j).get / (4.0 * a(j).get)
     def bimodal = {
-      val e = cleanIdx.map(j => b(j) / (4.0 * a(j)))
+      val e = cleanIdx.map(effOf)
       e.size >= 2 && median(e.toSeq) < 0.85 * e.max
     }
     var i = 0
@@ -184,10 +207,10 @@ object Bench {
       dirt += Seq(pa0, pa1, pb0, pb1).max
       i += 1
     }
-    val sel = if (cleanIdx.size >= 2) cleanIdx else dirt.indices.toSeq
-    val pairEffs = sel.map(j => b(j) / (4.0 * a(j))).toSeq
-    (median(sel.map(a).toSeq), median(sel.map(b).toSeq), a.toSeq, b.toSeq,
-      pairEffs, cleanIdx.size)
+    val sel = if (cleanIdx.size >= 2) cleanIdx else okIdx
+    PairStats(median(sel.map(a(_).get)), median(sel.map(b(_).get)),
+      a.flatten.toSeq, b.flatten.toSeq, sel.map(effOf), cleanIdx.size,
+      dirt.size - okIdx.size)
   }
 
   // ---- child-JVM sample isolation (headline + dedup scaling modes) ----
@@ -211,18 +234,19 @@ object Bench {
   }.getOrElse("16g")
   private val rateRe = """\{"rate":([0-9.]+)\}""".r
   /** Fork one `graft.Bench` child pinned to `cores` CPUs, with `childEnv`
-    * selecting the child-mode branch; parse its {"rate":...} line. The
+    * selecting the child-mode branch; parse its {"rate":...} line (None when
+    * the child printed none — a crashed child must not read as rate 0). The
     * parent (holding the table-build session's garbage) must NOT share the
     * child's pinned set: unpin while the child runs — the OS keeps the
     * unpinned parent on the idle low cores — and re-pin for the bracketing
     * post-sample probe. */
-  private def forkRate(cores: String, childEnv: Map[String, String]): Double = {
+  private def forkRate(cores: String, childEnv: Map[String, String]): Option[Double] = {
     val k = cores.toInt
     // same fail-soft contract as pinCpus: without taskset the child runs
     // unpinned (cpu_pinning:false already flags the run), and k >= total
     // CPUs means no confinement (oversubscribed but valid — pinCpus's own
     // guard; an unguarded range would go negative on a narrower box and
-    // taskset would exit without exec'ing the child, banking rate 0.0)
+    // taskset would exit without exec'ing the child, leaving no rate)
     val pin = if (pinningWorks && k < totalCpus)
       Seq("taskset", "-c", s"${totalCpus - k}-${totalCpus - 1}") else Seq.empty
     val cmd = pin ++ Seq(javaBin) ++ parentJvmArgs ++
@@ -237,10 +261,10 @@ object Bench {
       java.nio.charset.StandardCharsets.UTF_8)
     p.waitFor()
     pinCpus(k)
-    rateRe.findFirstMatchIn(out).map(_.group(1).toDouble).getOrElse {
+    val rate = rateRe.findFirstMatchIn(out).map(_.group(1).toDouble)
+    if (rate.isEmpty)
       System.err.println(s"[bench] child produced no rate: ${out.takeRight(500)}")
-      0.0
-    }
+    rate
   }
 
   def main(args: Array[String]): Unit = {
@@ -288,7 +312,7 @@ object Bench {
     // ---- per-query timings at env parallelism ----
     // (SPARK_GRAFT_SKIP_QUERIES=1 skips this phase for scaling experiments)
     // DEFERRED to after the headline scaling pairs in the full run: the
-    // 171-query sweep is ~165 s of all-core heat in the same JVM/box
+    // 175-query sweep is ~165 s of all-core heat in the same JVM/box
     // window, and r4's full-sweep efficiency (0.696) ran its pairs right
     // after it while the headline-only runs that cleared 0.8 didn't pay
     // that heat. The sweep itself is unaffected by ordering (min-of-2
@@ -362,7 +386,7 @@ object Bench {
       // that caps scaling efficiency at any core count.
       val evalMod = 41L * ampC
       val evalRes = 3L * ampC
-      def curateRate(cores: String, warm: Boolean): Double = {
+      def curateRate(cores: String, warm: Boolean): Option[Double] = {
         val s = session(cores, cores.toInt)
         try {
           def docs = s.read.parquet(docsPath)
@@ -371,17 +395,15 @@ object Bench {
             evalMod = evalMod, evalRes = evalRes).count()
           val nDocs = docs.count()
           s.catalog.clearCache()
-          nDocs / time(graft.ops.TextOps.curate(
+          Some(nDocs / time(graft.ops.TextOps.curate(
             graft.ops.TextOps.curationFixture(docs),
-            evalMod = evalMod, evalRes = evalRes).count())
+            evalMod = evalMod, evalRes = evalRes).count()))
         } finally s.stop()
       }
       val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
       val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt
-      def arr0(xs: Seq[Double]): String = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
-      val (rn, r4n, sa, sb, effs, clean) =
-        pairLoop(curateRate, n.toString, (4 * n).toString, samples)
-      println(s"""{"metric":"corpus-curate throughput (docs/sec)","scale_n":$n,"docs_per_sec_n":${f"$rn%.1f"},"docs_per_sec_4n":${f"$r4n%.1f"},"scaling_efficiency":${f"${median(effs)}%.3f"},"samples_n":${arr0(sa)},"samples_4n":${arr0(sb)},"pair_efficiencies":${effs.map(x => f"$x%.3f").mkString("[", ",", "]")},"clean_pairs":$clean,"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampC,"sf":"$sfDir"}""")
+      val ps = pairLoop(curateRate, n.toString, (4 * n).toString, samples)
+      println(s"""{"metric":"corpus-curate throughput (docs/sec)","scale_n":$n,${pairJson(ps, "docs_per_sec")},"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampC,"sf":"$sfDir"}""")
       return
     }
 
@@ -426,7 +448,7 @@ object Bench {
       }
       // Each sample forks a fresh child JVM (see forkRate); the warm flag
       // is moot — every child warms itself.
-      def dedupRate(cores: String, warm: Boolean): Double =
+      def dedupRate(cores: String, warm: Boolean): Option[Double] =
         forkRate(cores, Map("SPARK_GRAFT_DEDUP_CHILD" -> cores,
           "SPARK_GRAFT_DEDUP_PATH" -> docsPath))
       // stage-breakdown sub-mode (SPARK_GRAFT_DEDUP_STAGES=1): time each
@@ -462,10 +484,8 @@ object Bench {
       }
       val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
       val samples = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt
-      def arr0(xs: Seq[Double]): String = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
-      val (rn, r4n, sa, sb, effs, clean) =
-        pairLoop(dedupRate, n.toString, (4 * n).toString, samples)
-      println(s"""{"metric":"minhash-dedup throughput (docs/sec)","scale_n":$n,"docs_per_sec_n":${f"$rn%.1f"},"docs_per_sec_4n":${f"$r4n%.1f"},"scaling_efficiency":${f"${median(effs)}%.3f"},"samples_n":${arr0(sa)},"samples_4n":${arr0(sb)},"pair_efficiencies":${effs.map(x => f"$x%.3f").mkString("[", ",", "]")},"clean_pairs":$clean,"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampD,"sf":"$sfDir"}""")
+      val ps = pairLoop(dedupRate, n.toString, (4 * n).toString, samples)
+      println(s"""{"metric":"minhash-dedup throughput (docs/sec)","scale_n":$n,${pairJson(ps, "docs_per_sec")},"cpu_pinning":$pinningWorks,"load_probe_worst_ratio":${f"$probeWorst%.2f"},"amplification":$ampD,"sf":"$sfDir"}""")
       return
     }
 
@@ -500,7 +520,7 @@ object Bench {
       * pre-materialized 32-split pages table — every sample pays a
       * parallel scan, not a serial re-amplification. The warm flag is
       * moot in child mode. */
-    def sampleRate(cores: String, warm: Boolean): Double =
+    def sampleRate(cores: String, warm: Boolean): Option[Double] =
       forkRate(cores, Map("SPARK_GRAFT_HEADLINE_CHILD" -> cores,
         "SPARK_GRAFT_PAGES_PATH" -> pagesPath,
         "SPARK_GRAFT_HEADLINE_PARTS" -> headlineParts(cores).toString))
@@ -530,13 +550,11 @@ object Bench {
       *    count are reported so rejection is visible in the JSON. */
     val samplesPerConfig = sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "5").toInt
     def headlinePair(coresA: String, coresB: String,
-                     samples: Int = samplesPerConfig)
-        : (Double, Double, Seq[Double], Seq[Double], Seq[Double], Int) =
+                     samples: Int = samplesPerConfig): PairStats =
       pairLoop(sampleRate, coresA, coresB, samples)
-    // at-scale forward paths (grid-index equi-join, no gazetteer broadcast)
-    // measured at 4N for comparison with the broadcast-path headline:
-    // skinny index (3 exchanges, feature verify-join) and fat index
-    // (payload denormalized, verify in-row, 2 exchanges)
+    // the at-scale forward path (grid-index equi-join, no gazetteer
+    // broadcast) measured at 4N for comparison with the broadcast-path
+    // headline
     def headlineIndexed(cores: String): Double = {
       val s = session(cores, headlineParts(cores))
       try {
@@ -552,46 +570,12 @@ object Bench {
         nDocs / sec
       } finally s.stop()
     }
-    def headlineFat(cores: String): Double = {
-      val s = session(cores, headlineParts(cores))
-      try {
-        def grid = graft.queries.Queries.gazGridFatParquet(s)
-        def pages = s.read.parquet(pagesPath)
-        Geocode.forwardIndexedFat(pages.limit(10000), grid).count()
-        val nDocs = pages.count()
-        val sec = (1 to 3).map { _ =>
-          s.catalog.clearCache()
-          time(Geocode.forwardIndexedFat(pages, grid).count())
-        }.min
-        nDocs / sec
-      } finally s.stop()
-    }
-    // fat index from the BUCKETED catalog table: the index side arrives
-    // pre-hash-partitioned from disk, so the match join plans zero exchange
-    // above the index scan (the write-time layout the 100-TB deployment
-    // would use — bucket once per index epoch, save the shuffle per query)
-    def headlineBucketed(cores: String): Double = {
-      val s = session(cores, headlineParts(cores))
-      try {
-        val grid = graft.queries.Queries.gazGridFatBucketed(s) // builds once per catalog
-        def pages = s.read.parquet(pagesPath)
-        Geocode.forwardIndexedFat(pages.limit(10000), grid).count()
-        val nDocs = pages.count()
-        val sec = (1 to 3).map { _ =>
-          s.catalog.clearCache()
-          time(Geocode.forwardIndexedFat(pages, grid).count())
-        }.min
-        nDocs / sec
-      } finally s.stop()
-    }
 
     // N vs 4N cores (BASELINE.json: "N and 4N executors"); N overridable —
     // small N measures cleanest on a shared box (GC/IO threads are JVM-wide
     // and would otherwise subsidize the small configuration). The full-width
     // 8-vs-32 pair is reported ALONGSIDE (BASELINE.md's stated config);
     // disable with SPARK_GRAFT_SKIP_8V32=1 when iterating locally.
-    def arr(xs: Seq[Double]): String = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
-
     if (sys.env.get("SPARK_GRAFT_ONLY_QUERIES").contains("1")) {
       val results = runQueries()
       val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
@@ -602,25 +586,21 @@ object Bench {
     }
 
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
-    val (rateN, rate4N, sN, s4N, pairEffs, cleanPairs) =
-      headlinePair(n.toString, (4 * n).toString)
-    val eff = median(pairEffs)
+    val head = headlinePair(n.toString, (4 * n).toString)
     val wide =
       if (sys.env.get("SPARK_GRAFT_SKIP_8V32").contains("1") || n == 8) ""
       else {
         // the 8v32 pair is reported ALONGSIDE (it measures the box's memory
         // ceiling, not the plan — BENCH.md); 3 samples keep total bench
         // wall-time bounded while the PRIMARY N/4N pair gets the full 5
-        val (r8, r32, s8, s32, e832, _) = headlinePair("8", "32", math.min(3, samplesPerConfig))
-        s""","docs_per_sec_8":${f"$r8%.1f"},"docs_per_sec_32":${f"$r32%.1f"},"scaling_efficiency_8_32":${f"${median(e832)}%.3f"},"samples_8":${arr(s8)},"samples_32":${arr(s32)}"""
+        val w = headlinePair("8", "32", math.min(3, samplesPerConfig))
+        s""","docs_per_sec_8":${num(w.rateA, 1)},"docs_per_sec_32":${num(w.rateB, 1)},"scaling_efficiency_8_32":${num(w.eff, 3)},"samples_8":${nums(w.samplesA, 1)},"samples_32":${nums(w.samplesB, 1)},"missing_pairs_8_32":${w.missingPairs}"""
       }
 
-    // the at-scale index-path rates pin to the same 4N CPU set as the
+    // the at-scale index-path rate pins to the same 4N CPU set as the
     // headline so the comparison is like-for-like
     pinCpus(4 * n)
     val rateIdx = headlineIndexed((4 * n).toString)
-    val rateFat = headlineFat((4 * n).toString)
-    val rateBuck = headlineBucketed((4 * n).toString)
     unpinCpus()
 
     // per-query sweep LAST (its ~150 s of all-core heat must not sit in
@@ -650,9 +630,8 @@ object Bench {
         .map(_.group(1)).getOrElse("0.000")
       (obj, tot, idf)
     }
-    val pairEffStr = pairEffs.map(x => f"$x%.3f").mkString("[", ",", "]")
     println(
-      s"""{"metric":"geocode-join throughput (docs/sec)","value":${f"$rate4N%.1f"},"unit":"docs/sec","total_query_sec":${f"$total%.3f"},"queries":$qs,"scale_n":$n,"docs_per_sec_n":${f"$rateN%.1f"},"docs_per_sec_4n":${f"$rate4N%.1f"},"scaling_efficiency":${f"$eff%.3f"},"samples_n":${arr(sN)},"samples_4n":${arr(s4N)},"pair_efficiencies":$pairEffStr,"clean_pairs":$cleanPairs,"cpu_pinning":$pinningWorks,"idf_dict_sec":$idfStr,"estimator":"pinned-pair-ratio-median_clean_probe_le_1.2-interleaved-$samplesPerConfig","load_probe_worst_ratio":${f"$probeWorst%.2f"}$wide,"docs_per_sec_indexed_4n":${f"$rateIdx%.1f"},"docs_per_sec_fat_4n":${f"$rateFat%.1f"},"docs_per_sec_bucketed_4n":${f"$rateBuck%.1f"},"amplification":$amp,"sf":"$sfDir"}""")
+      s"""{"metric":"geocode-join throughput (docs/sec)","value":${num(head.rateB, 1)},"unit":"docs/sec","total_query_sec":${f"$total%.3f"},"queries":$qs,"scale_n":$n,${pairJson(head, "docs_per_sec")},"cpu_pinning":$pinningWorks,"idf_dict_sec":$idfStr,"estimator":"pinned-pair-ratio-median_clean_probe_le_1.2-interleaved-$samplesPerConfig","load_probe_worst_ratio":${f"$probeWorst%.2f"}$wide,"docs_per_sec_indexed_4n":${f"$rateIdx%.1f"},"amplification":$amp,"sf":"$sfDir"}""")
   }
 }
 

@@ -21,8 +21,9 @@ object SparkEntry {
     // --- geocoding core (SURVEY.md §2.B/C/D/E/F/H) ---
     "fwd_geocode" -> ((s, d) => Queries.fwdGeocode(s, d)),
     "fwd_geocode_indexed" -> ((s, d) => Queries.fwdGeocodeIndexed(s, d)),
-    "fwd_geocode_fat" -> ((s, d) => Queries.fwdGeocodeFat(s, d)),
-    "fwd_geocode_bucketed" -> ((s, d) => Queries.fwdGeocodeBucketed(s, d)),
+    // aliases: one grid-index layout serves these names (layouts measured tied)
+    "fwd_geocode_fat" -> ((s, d) => Queries.fwdGeocodeIndexed(s, d)),
+    "fwd_geocode_bucketed" -> ((s, d) => Queries.fwdGeocodeIndexed(s, d)),
     "fwd_geocode_multi" -> ((s, d) => Queries.fwdGeocodeMulti(s, d)),
     "fwd_geocode_multi_indexed" -> ((s, d) => Queries.fwdGeocodeMultiIndexed(s, d)),
     "fwd_dedup" -> ((s, d) => Queries.fwdDedup(s, d)),
@@ -50,6 +51,8 @@ object SparkEntry {
     // grid DBSCAN over event points: eps-grid blocking, CC core clusters,
     // deterministic min-label border attachment
     "dbscan" -> ((s, d) => Queries.dbscan(s, d)),
+    // D7 as a query: the eps-grid self-join with hot-cell salting
+    "dbscan_salted" -> ((s, d) => Queries.dbscanSalted(s, d)),
     // trajectory analytics: OD cell-transition matrix and time-gap trip
     // segmentation (one user-keyed exchange each)
     "od_flows" -> ((s, d) => Queries.odFlows(s, d)),
@@ -147,17 +150,10 @@ object SparkEntry {
     "dp_simplify" -> ((s, d) => Queries.dpSimplify(s, d)),
     "cell_compact" -> ((s, d) => Queries.cellCompact(s, d)),
     "reverse_pip" -> ((s, d) => Queries.reversePip(s, d)),
-    "reverse_bcast" -> ((s, d) =>
-      ops.Geocode.reverseBcast(s, Synth.eventPoints(s, d), Synth.custFeatures(s, d), 8,
-        cacheKey = Some(s"$d/customer"))
-        .select(col("event_id"), col("feature_id"))),
-    "reverse_salted" -> ((s, d) =>
-      // D7 in the driver surface: hot-cell salted reverse join — row-identical
-      // to reverse_pip (shares its oracle); the salt replicates the cover
-      // index for the measured-hot cells only
-      ops.Geocode.reversePipSalted(Synth.eventPoints(s, d), Synth.custFeatures(s, d), 8,
-        s = 4, hotK = 8, hotThreshold = 1000)
-        .select(col("event_id"), col("feature_id"))),
+    // aliases: reversePip already broadcasts its cover index, so one reverse
+    // join serves these names
+    "reverse_bcast" -> ((s, d) => Queries.reversePip(s, d)),
+    "reverse_salted" -> ((s, d) => Queries.reversePip(s, d)),
     "reverse_compact" -> ((s, d) => Queries.reverseCompact(s, d)),
     "asof_epoch" -> ((s, d) => Queries.asofEpoch(s, d)),
     "interval_join" -> ((s, d) => Queries.intervalJoin(s, d)),
@@ -425,6 +421,7 @@ object SparkEntry {
     "poly_centroid" -> Queries.polyCentroidSql,
     "seg_join" -> Queries.segJoinSql,
     "dbscan" -> Queries.dbscanSql,
+    "dbscan_salted" -> Queries.dbscanSql,
     "od_flows" -> Queries.odFlowsSql,
     "trip_segments" -> Queries.tripSegmentsSql,
     "co_locate" -> Queries.coLocateSql,
@@ -472,8 +469,8 @@ object SparkEntry {
     "dp_simplify" -> Queries.dpSimplifySql,
     "cell_compact" -> Queries.cellCompactSql,
     "reverse_pip" -> Queries.reversePipSql,
-    "reverse_bcast" -> Queries.reversePipSql, // same semantics, shuffle-free plan
-    "reverse_salted" -> Queries.reversePipSql, // same semantics, skew-salted plan
+    "reverse_bcast" -> Queries.reversePipSql, // alias of reverse_pip
+    "reverse_salted" -> Queries.reversePipSql, // alias of reverse_pip
     "reverse_compact" -> Queries.reversePipSql, // compacted-index lookup ≡ direct PIP
     "asof_epoch" -> Queries.asofEpochSql,
     "interval_join" -> Queries.intervalJoinSql,

@@ -229,12 +229,13 @@ object Geo {
     * side-change analysis the r4 half-open shortcut skipped.
     *
     * EXACT on the milli-degree lattice: when every coordinate of both
-    * inputs sits on the 0.001° lattice (within ulps), coordinates are first
-    * quantized to exact integer-valued doubles (round(x·1000) —
-    * boundary-safe, the ov_area_q trick). All predicates are then exact:
-    * orientation/cross products of integers < 2^20 stay < 2^41 ≪ 2^53, and
-    * probe midpoints are dyadic halves. The r4 corner-touch false positive
-    * (two squares sharing one vertex, disjoint interiors → true) is gone —
+    * inputs sits within 1e-9° of the 0.001° lattice (see [[latticeAligned]]),
+    * coordinates are first quantized to exact integer-valued doubles
+    * (round(x·1000) — boundary-safe, the ov_area_q trick). All predicates
+    * are then exact: orientation/cross products of integers < 2^20 stay
+    * < 2^41 ≪ 2^53, and probe midpoints are dyadic halves. The r4
+    * corner-touch false positive (two squares sharing one vertex, disjoint
+    * interiors → true) is gone —
     * GeoSpec pins the flip. Non-lattice inputs take the same code path on
     * the raw coordinates: exact in general position (boundary coincidences
     * off the lattice are measure-zero; JTS relate("2********") property
@@ -248,6 +249,12 @@ object Geo {
     ringsOverlap(ra, rb, exactInts = exact)
   }
 
+  /** True iff every coordinate lies within 1e-9° of the 0.001° lattice
+    * (|x·1000 − rint(x·1000)| ≤ 1e-6). That snap radius is part of the
+    * kernel's contract: it is far wider than the rounding error of a
+    * lattice value (~3e-11° at |x| ≈ 180), so a genuinely off-lattice
+    * coordinate within 1e-9° of the grid is snapped to it, which can flip
+    * an overlap verdict relative to evaluating the raw doubles. */
   private def latticeAligned(rings: Array[Array[Double]]): Boolean = {
     var r = 0
     while (r < rings.length) {
@@ -631,66 +638,6 @@ object Geo {
       }
       y += 1
     }
-  }
-
-  // ------------------------------------------------------------------
-  // Tile pre-clipping (north star: "WKB polygons pre-clipped to z14
-  // tiles"): Sutherland–Hodgman against the tile rectangle. Clipping each
-  // ring independently preserves even-odd PIP on tile-interior points:
-  // PIP(clip(A,R), p) = PIP(A,p) ∧ PIP(R,p), and the hole parity XORs
-  // through ring-by-ring clipping.
-  // ------------------------------------------------------------------
-
-  /** Clip one closed ring (packed lon/lat) to the axis-aligned rect.
-    * Returns the clipped closed ring, or empty if no overlap. */
-  def clipRingToRect(ring: Array[Double], w: Double, s: Double,
-                     e: Double, n: Double): Array[Double] = {
-    // edge = 0:left(x>=w) 1:right(x<=e) 2:bottom(y>=s) 3:top(y<=n)
-    var pts = ring
-    var edge = 0
-    while (edge < 4 && pts.length >= 6) {
-      val out = new ArrayBuffer[Double](pts.length + 8)
-      @inline def inside(x: Double, y: Double): Boolean = edge match {
-        case 0 => x >= w
-        case 1 => x <= e
-        case 2 => y >= s
-        case _ => y <= n
-      }
-      @inline def intersect(x1: Double, y1: Double, x2: Double, y2: Double): (Double, Double) =
-        edge match {
-          case 0 => (w, y1 + (y2 - y1) * (w - x1) / (x2 - x1))
-          case 1 => (e, y1 + (y2 - y1) * (e - x1) / (x2 - x1))
-          case 2 => (x1 + (x2 - x1) * (s - y1) / (y2 - y1), s)
-          case _ => (x1 + (x2 - x1) * (n - y1) / (y2 - y1), n)
-        }
-      val nPts = pts.length / 2
-      var i = 0
-      while (i < nPts) {
-        val j = (i + 1) % nPts
-        val (x1, y1) = (pts(2 * i), pts(2 * i + 1))
-        val (x2, y2) = (pts(2 * j), pts(2 * j + 1))
-        val in1 = inside(x1, y1); val in2 = inside(x2, y2)
-        if (in1) { out += x1; out += y1 }
-        if (in1 != in2) {
-          val (ix, iy) = intersect(x1, y1, x2, y2)
-          out += ix; out += iy
-        }
-        i += 1
-      }
-      pts = out.toArray
-      edge += 1
-    }
-    if (pts.length < 6) Array.emptyDoubleArray else pts
-  }
-
-  /** Clip a polygon geometry to a cell's bounds; empty Geom if disjoint. */
-  def clipToCell(geom: Geom, cell: Long): Geom = {
-    val (w, s, e, n) = CellMath.cellBounds(cell)
-    val rings = geom.rings.iterator
-      .map(clipRingToRect(_, w, s, e, n))
-      .filter(_.nonEmpty)
-      .toArray
-    Geom(Geom.Poly, rings)
   }
 
   // ------------------------------------------------------------------

@@ -286,23 +286,6 @@ object Exprs {
       copy(first = f, second = s, third = t, fourth = q)
   }
 
-  /** clip_to_cell(geom_wkb, cell): polygon pre-clipped to the tile rect
-    * (Sutherland–Hodgman) re-encoded as WKB — the per-tile geometry the
-    * batched PIP stage consumes. */
-  case class ClipToCellWkb(left: Expression, right: Expression)
-      extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = BinaryType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "clip_to_cell"
-    override def nullSafeEval(wkb: Any, cell: Any): Any = {
-      val g = Geo.clipToCell(Geo.parseWkb(wkb.asInstanceOf[Array[Byte]]),
-        cell.asInstanceOf[Long])
-      Geo.writeWkbPolygon(g.rings)
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): ClipToCellWkb =
-      copy(left = l, right = r)
-  }
-
   // ---------------------------------------------------------------
   // Text kernel (B1/B2/B7) — CodegenFallback unary
   // ---------------------------------------------------------------
@@ -1009,7 +992,6 @@ object F {
   def wkbBbox(wkb: Column): Column = c(WkbBbox(x(wkb)))
   def polyMoments(wkb: Column): Column = c(PolyMoments(x(wkb)))
   def tileCover(wkb: Column, z: Column): Column = c(TileCoverExpr(x(wkb), x(z)))
-  def clipToCell(wkb: Column, cell: Column): Column = c(ClipToCellWkb(x(wkb), x(cell)))
   def rectWkb(w: Column, s: Column, e: Column, n: Column): Column =
     c(RectWkb(x(w), x(s), x(e), x(n)))
   def dpKeepIds(xs: Column, ys: Column, ids: Column, tol2: Column): Column =

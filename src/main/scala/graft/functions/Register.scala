@@ -39,7 +39,6 @@ object Register {
     mk("pip_wkb", Seq(BinaryType, DoubleType, DoubleType),
       a => Exprs.PipWkb(a(0), a(1), a(2)))
     mk("tile_cover", Seq(BinaryType, IntegerType), a => Exprs.TileCoverExpr(a(0), a(1)))
-    mk("clip_to_cell", Seq(BinaryType, LongType), a => Exprs.ClipToCellWkb(a(0), a(1)))
     mk("rect_wkb", Seq(DoubleType, DoubleType, DoubleType, DoubleType),
       a => Exprs.RectWkb(a(0), a(1), a(2), a(3)))
     mk("extract_text", Seq(BinaryType), a => Exprs.ExtractText(a(0)))

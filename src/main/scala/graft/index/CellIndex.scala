@@ -1,26 +1,20 @@
 package graft.index
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftshim.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.sql.functions._
 import graft.functions.F
 
-/** The north star's "broadcastable sorted cell->feature-id array replacing
-  * Carmen's grid/cover index": two parallel Long arrays (cells ascending,
-  * ids tie-sorted) + binary-search range lookup. Replaces carmen-cache's
-  * per-phrase grid lists / RocksDB pointer chases with one cache-friendly
-  * sorted array that ships to every executor as a broadcast — a cell →
-  * feature-ids probe is then pure in-memory binary search inside a map
-  * stage: the reverse-geocode join needs NO shuffle at all.
-  *
-  * Size: 16 B/entry → 10^8 cover entries ≈ 1.6 GB, the practical broadcast
-  * ceiling; beyond that the same layout lives as the Hilbert-sorted parquet
-  * table ([[IndexBuild]]) and the probe becomes the D5 cell equi-join.
+/** The north star's "sorted cell->feature-id array replacing Carmen's
+  * grid/cover index": two parallel Long arrays (cells ascending, ids
+  * tie-sorted) + binary-search range lookup — carmen-cache's per-phrase
+  * grid lists / RocksDB pointer chases as one cache-friendly sorted array,
+  * the in-memory form of the Hilbert-sorted parquet table [[IndexBuild]]
+  * writes. 16 B/entry.
   */
 final class CellIndexData(val cells: Array[Long], val fids: Array[Long])
     extends Serializable {
@@ -48,15 +42,6 @@ final class CellIndexData(val cells: Array[Long], val fids: Array[Long])
 
 object CellIndex {
 
-  /** Process-wide memo of built indexes: the collect-and-sort build is a
-    * batch-index job, not a per-query step — a query path that rebuilt the
-    * (up to ~1.6 GB) array per invocation would be a driver collect per
-    * query at the ceiling. Keyed by caller-supplied identity (source table
-    * path + zoom); survives session restarts within the JVM. */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, CellIndexData]()
-  def cached(key: String)(build: => CellIndexData): CellIndexData =
-    memo.computeIfAbsent(key, _ => build)
-
   /** Build from a (cell, feature_id) frame. The distributed sort happens in
     * Spark (range shuffle); only the final compact arrays are collected —
     * the same rows [[IndexBuild]] writes as the on-disk sorted table. */
@@ -77,21 +62,6 @@ object CellIndex {
     build(features.select(col("feature_id"),
       explode(F.tileCover(col("geom_wkb"), lit(z))).as("cell")))
 
-  /** cell_lookup(cell): array of feature ids — binary search against the
-    * broadcast index, evaluated inside the map stage (no shuffle, no join). */
-  case class CellLookup(child: Expression, bc: Broadcast[CellIndexData])
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "cell_lookup"
-    override def nullSafeEval(cell: Any): Any =
-      new GenericArrayData(bc.value.lookup(cell.asInstanceOf[Long]))
-    override protected def withNewChildInternal(c: Expression): CellLookup = copy(child = c)
-  }
-
-  def lookupCol(cell: Column, bc: Broadcast[CellIndexData]): Column =
-    ColumnBridge.column(CellLookup(ColumnBridge.expression(cell), bc))
-
   /** long_set_contains(key): membership in a broadcast SORTED long array —
     * the semi-join reduction filter. Used to prune probe rows BEFORE they
     * shuffle into a large equi-join (e.g. token windows vs the grid index:
@@ -101,7 +71,7 @@ object CellIndex {
     * 10^7 phrases = 80 MB, comfortably under the broadcast ceiling. */
   case class LongSetContains(child: Expression, bc: Broadcast[Array[Long]])
       extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+    override def dataType: DataType = BooleanType
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "long_set_contains"
     override def nullSafeEval(key: Any): Any =
@@ -121,7 +91,7 @@ object CellIndex {
   case class BloomMightContain(child: Expression,
                                bc: Broadcast[org.apache.spark.util.sketch.BloomFilter])
       extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = org.apache.spark.sql.types.BooleanType
+    override def dataType: DataType = BooleanType
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "bloom_might_contain"
     override def nullSafeEval(key: Any): Any =

@@ -40,48 +40,15 @@ object IndexBuild {
       .withColumn("hkey", F.hilbertCell(col("cell")))
       .select("phrase_id", "cell", "feature_id", "relev_q", "score_q", "hkey")
 
-  /** D1/A3: grid-index rows for a POINT-feature gazetteer (one cell per
-    * feature at its type's index zoom) — the table [[graft.ops.Geocode.forwardIndexed]]
-    * equi-joins doc windows against. Schema matches [[gridEntries]] plus the
-    * index type: (phrase_id, typ, cell, feature_id, relev_q, score_q, hkey). */
-  def gazetteerGrid(gaz: DataFrame, zPlace: Int, zRegion: Int): DataFrame =
-    gaz.select(
-      phraseId(col("name")).as("phrase_id"),
-      col("typ"),
-      F.cellAt(when(col("typ") === "place", lit(zPlace)).otherwise(lit(zRegion)),
-        col("glon"), col("glat")).as("cell"),
-      col("gid").as("feature_id"),
-      relevQ(lit(1.0)).as("relev_q"),
-      scoreQ(col("score")).as("score_q"))
-      .withColumn("hkey", F.hilbertCell(col("cell")))
-
-  /** [[gazetteerGrid]] with the rank-time feature payload (name, score, lon,
-    * lat) DENORMALIZED into the index row — the "fat" index. D4 name-verify
-    * becomes an in-row `phrase = name` filter and the per-candidate feature
-    * join — a full shuffle of the candidate frame on feature_id — disappears
-    * from the query plan ([[graft.ops.Geocode.forwardIndexedFat]]). Index
-    * rows grow by one string + three doubles (~40 B); at the 10^7-feature
-    * design point that is well under 1 GB extra table for one fewer big-side
-    * exchange on EVERY query — the classic index-only-scan trade. */
-  def gazetteerGridFat(gaz: DataFrame, zPlace: Int, zRegion: Int): DataFrame =
-    gaz.select(
-      phraseId(col("name")).as("phrase_id"),
-      col("typ"),
-      F.cellAt(when(col("typ") === "place", lit(zPlace)).otherwise(lit(zRegion)),
-        col("glon"), col("glat")).as("cell"),
-      col("gid").as("feature_id"),
-      relevQ(lit(1.0)).as("relev_q"),
-      scoreQ(col("score")).as("score_q"),
-      col("name"), col("score"), col("glon"), col("glat"))
-      .withColumn("hkey", F.hilbertCell(col("cell")))
-
-  /** [[gazetteerGridFat]] generalized to N index levels: each feature's cell
-    * is taken at ITS type's index zoom (carmen: one tilelive source per type,
-    * each with its own maxzoom). `levels` is (typ, zoom); the N-level
-    * forward ([[graft.ops.Geocode.forwardIndexedMultiFat]]) re-derives every
-    * coarser ancestor cell from the denormalized lon/lat, so the index needs
-    * only the leaf cell. */
-  def gazetteerGridFatLevels(gaz: DataFrame, levels: Seq[(String, Int)]): DataFrame = {
+  /** D1/A3: grid-index rows for a POINT-feature gazetteer — one cell per
+    * feature at its type's index zoom (carmen: one tilelive source per type,
+    * each with its own maxzoom). `levels` is (typ, zoom); features of a type
+    * not in `levels` get a null cell. This is the table the indexed forwards
+    * ([[graft.ops.Geocode.forwardIndexed]], N-level
+    * [[graft.ops.Geocode.forwardIndexedMulti]]) equi-join doc windows
+    * against. Schema matches [[gridEntries]] plus the index type:
+    * (phrase_id, typ, cell, feature_id, relev_q, score_q, hkey). */
+  def gazetteerGrid(gaz: DataFrame, levels: Seq[(String, Int)]): DataFrame = {
     val zoomOf = levels.tail.foldLeft(
       when(col("typ") === levels.head._1, lit(levels.head._2))) {
       case (acc, (t, z)) => acc.when(col("typ") === t, lit(z))
@@ -92,8 +59,7 @@ object IndexBuild {
       F.cellAt(zoomOf, col("glon"), col("glat")).as("cell"),
       col("gid").as("feature_id"),
       relevQ(lit(1.0)).as("relev_q"),
-      scoreQ(col("score")).as("score_q"),
-      col("name"), col("score"), col("glon"), col("glat"))
+      scoreQ(col("score")).as("score_q"))
       .withColumn("hkey", F.hilbertCell(col("cell")))
   }
 

@@ -22,13 +22,12 @@ object Geocode {
   final val ZRegion = 8   // coarse index zoom (regions)
   final val ZPlace = 12   // fine index zoom (places)
 
-  /** Broadcast ceilings, in ENTRIES (VERDICT r2 "what's wrong" #3: the
+  /** Broadcast ceiling, in ENTRIES (VERDICT r2 "what's wrong" #3: the
     * fallback used to be prose — now the operators MEASURE the dictionary
-    * and pick the path). ~24 B/term and ~16 B/cover-entry put both near the
-    * practical 1–2 GB broadcast budget; tests force tiny ceilings to prove
-    * the fallback paths are row-identical. */
+    * and pick the path). ~24 B/term puts it near the practical 1–2 GB
+    * broadcast budget; tests force tiny ceilings to prove the fallback
+    * paths are row-identical. */
   final val BroadcastDictCeiling = 50000000L   // gazetteer names / term dict
-  final val BroadcastCoverCeiling = 100000000L // cell-cover index entries
 
   /** Memoized count of a dimension frame (the ceiling probe): one tiny job
     * per distinct plan, like [[maxNameTokens]]. */
@@ -616,17 +615,8 @@ object Geocode {
 
   /** D1/A3/H7 at scale: forward geocode over the BUILT grid index instead of
     * a broadcast name list — the path that survives a 10^7-feature gazetteer.
-    *
-    *   1. doc token windows → `phrase_id = xxhash64(phrase)` (map-side);
-    *   2. equi-join against the grid index on phrase_id (shuffle-hash — the
-    *      index is 10s of GB at the design point, never broadcastable);
-    *      the index row carries (cell, feature_id, relev_q, score_q);
-    *   3. F2 grid-stage prune: per (doc, phrase, typ) keep the `stackCap`
-    *      best entries by (relev_q desc, score_q desc, id) — the quantized
-    *      ranking is exactly what carmen's coalesce consumes before verify;
-    *   4. D4 verify: join the feature table by id and require the feature's
-    *      name to equal the matched phrase (drops phrase-id hash collisions);
-    *   5. coalesce + rank re-using the index cells (never recomputed).
+    * The [[indexedMatch]] stage feeds the 2-level stack coalesce, re-using the
+    * index cells (never recomputed).
     *
     * Row-identical to [[forward]] over the same gazetteer as long as
     * `stackCap` exceeds the per-phrase feature count (GeocoderSpec asserts
@@ -636,13 +626,51 @@ object Geocode {
                      k: Int = 5, stackCap: Int = 64,
                      dedupe: Boolean = false,
                      dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val maxLen = maxNameTokens(features)
-    val windows = tokenWindowsPos(docs, maxLen)
+    val verified = indexedMatch(docs, grid, features, stackCap, dictCeiling)
+    val placeCands = verified.filter(col("typ") === "place")
+      .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
+    val regionCands = verified.filter(col("typ") === "region")
+    rank(stackAndUnion(placeCands, regionCands, maskRelev = true), k, dedupe)
+  }
+
+  /** The at-scale N-level forward: [[coalesceN]]'s chain construction fed by
+    * the same [[indexedMatch]] stage as [[forwardIndexed]], over a grid built
+    * with one index zoom per level ([[graft.index.IndexBuild.gazetteerGrid]]
+    * with `levels`) — the path that stacks "austin, travis county, texas,
+    * usa" without ever shipping the 10^7-feature dictionary to executors.
+    * coalesceN re-derives every level's cell from the verified feature
+    * coordinates, so it is row-identical to the broadcast path under the
+    * usual stackCap condition and shares its oracle. */
+  def forwardIndexedMulti(docs: DataFrame, grid: DataFrame, features: DataFrame,
+                          levels: Seq[IndexLevel] = DefaultLevels,
+                          k: Int = 5, stackCap: Int = 64,
+                          dictCeiling: Long = BroadcastDictCeiling): DataFrame =
+    rank(coalesceN(indexedMatch(docs, grid, features, stackCap, dictCeiling), levels),
+      k, extraCols = Seq("chain"))
+
+  /** The match stage shared by the indexed forwards:
+    *
+    *   1. doc token windows → `phrase_id = xxhash64(phrase)` (map-side),
+    *      pre-filtered by the tiered phrase-id set ([[prefilterPhrases]]:
+    *      exact set ≤ ceiling, Bloom ≤ 8× ceiling, unfiltered beyond);
+    *   2. equi-join against the grid index on phrase_id (shuffle-hash — the
+    *      index is 10s of GB at the design point, never broadcastable);
+    *      the index row carries (typ, cell, feature_id, relev_q, score_q);
+    *   3. F2 grid-stage prune: per (doc, phrase, typ) keep the `stackCap`
+    *      best entries by (relev_q desc, score_q desc, id) — the quantized
+    *      ranking is exactly what carmen's coalesce consumes before verify;
+    *   4. D4 verify: join the feature table by id and require the feature's
+    *      name to equal the matched phrase (drops phrase-id hash collisions).
+    *
+    * Output: one row per verified mention — (doc_id, qlon, qlat, gid, name,
+    * typ, score, glon, glat, cell, w, pos, plen), the columns the coalesce
+    * stages consume. Persisted: every coalesce reads it more than once. */
+  private def indexedMatch(docs: DataFrame, grid: DataFrame, features: DataFrame,
+                           stackCap: Int, dictCeiling: Long): DataFrame = {
+    val windows = tokenWindowsPos(docs, maxNameTokens(features))
       .withColumn("phrase_id", xxhash64(col("phrase")))
-    // Semi-join reduction BEFORE the shuffle (see [[prefilterPhrases]]):
-    // exact set ≤ ceiling, Bloom ≤ 8× ceiling, unfiltered beyond.
-    val prefiltered = prefilterPhrases(windows, grid, dictCeiling)
-    val hits = prefiltered.join(grid.hint("shuffle_hash"), "phrase_id")
+    val hits = prefilterPhrases(windows, grid, dictCeiling)
+      .join(grid.hint("shuffle_hash"), "phrase_id")
     val pruned = hits
       .withColumn("gr", row_number().over(
         Window.partitionBy(col("doc_id"), col("phrase_id"), col("typ"))
@@ -651,7 +679,7 @@ object Geocode {
       .drop("gr", "typ")
     val feats = features.select(col("gid"), col("name"), col("typ"),
       col("score"), col("glon"), col("glat"))
-    val verified = pruned
+    pruned
       .join(feats.hint("shuffle_hash"), pruned("feature_id") === feats("gid"))
       .filter(col("phrase") === col("name"))
       .select(col("doc_id"), col("qlon"), col("qlat"), col("gid"), col("name"),
@@ -659,99 +687,6 @@ object Geocode {
         (size(split(col("name"), " ")) / lit(3.0)).as("w"),
         col("pos"), size(split(col("name"), " ")).as("plen"))
       .persist()
-    val placeCands = verified.filter(col("typ") === "place")
-      .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
-    val regionCands = verified.filter(col("typ") === "region")
-    rank(stackAndUnion(placeCands, regionCands, maskRelev = true), k, dedupe)
-  }
-
-  /** [[forwardIndexed]] over a FAT grid index
-    * ([[graft.index.IndexBuild.gazetteerGridFat]]): the index row carries the
-    * rank-time payload (name, typ, score, glon, glat), so D4 verify is an
-    * in-row `phrase = name` FILTER and the feature-table join — a second
-    * full shuffle of the per-doc candidate frame, on feature_id — is gone.
-    * Exchanges on the doc lineage drop 3 → 2: the phrase_id match join and
-    * the doc_id stack join (whose exchange the rank windows then reuse).
-    * The grid-prune window needs no exchange of its own: its partition keys
-    * (doc_id, phrase_id, typ) are a superset of the join's phrase_id
-    * hash-partitioning, which therefore already clusters them.
-    *
-    * Row-identical to [[forward]] and [[forwardIndexed]] under the same
-    * `stackCap`-exceeds-per-phrase-fanout condition (GeocoderSpec); verify
-    * runs BEFORE the cap here (it is free in-row), so hash-collision ghosts
-    * can never crowd real candidates out of the cap window. */
-  def forwardIndexedFat(docs: DataFrame, fatGrid: DataFrame,
-                        k: Int = 5, stackCap: Int = 64,
-                        dedupe: Boolean = false,
-                        dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val maxLen = maxNameTokens(fatGrid)
-    val windows = tokenWindowsPos(docs, maxLen)
-      .withColumn("phrase_id", xxhash64(col("phrase")))
-    // same tiered semi-join prefilter as [[forwardIndexed]]: the distinct
-    // phrase-id SET stays dictionary-sized no matter how fat the index rows
-    val prefiltered = prefilterPhrases(windows, fatGrid, dictCeiling)
-    // D4 verify, in-row. Written as a RANGE pair (<= AND >=), not `===`:
-    // Catalyst extracts any one-side-each equality into the join KEYS, which
-    // would re-key the exchange on (phrase_id, phrase) — and the grid-prune
-    // window below (clustered by doc_id, phrase_id, typ) would then need an
-    // exchange of its own. As residual predicates the join stays keyed on
-    // phrase_id alone and the window reuses its exchange (same trick as the
-    // doc_id-keyed stack join — see [[stackAndUnion]]).
-    val verified = prefiltered.join(fatGrid.hint("shuffle_hash"),
-        prefiltered("phrase_id") === fatGrid("phrase_id") &&
-          col("phrase") <= col("name") && col("phrase") >= col("name"))
-      .drop(fatGrid("phrase_id"))
-      .withColumn("gr", row_number().over(
-        Window.partitionBy(col("doc_id"), col("phrase_id"), col("typ"))
-          .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
-      .filter(col("gr") <= stackCap)
-      .select(col("doc_id"), col("qlon"), col("qlat"),
-        col("feature_id").as("gid"), col("name"), col("typ"), col("score"),
-        col("glon"), col("glat"), col("cell"),
-        (size(split(col("name"), " ")) / lit(3.0)).as("w"),
-        col("pos"), size(split(col("name"), " ")).as("plen"))
-      .persist()
-    val placeCands = verified.filter(col("typ") === "place")
-      .withColumn("cell8p", F.parentCell(col("cell"), lit(ZRegion)))
-    val regionCands = verified.filter(col("typ") === "region")
-    rank(stackAndUnion(placeCands, regionCands, maskRelev = true), k, dedupe)
-  }
-
-  /** The at-scale N-level forward: [[coalesceN]]'s chain construction fed
-    * from the FAT grid index ([[graft.index.IndexBuild.gazetteerGridFatLevels]])
-    * instead of a broadcast gazetteer — the path that stacks
-    * "austin, travis county, texas, usa" without ever shipping the
-    * 10^7-feature dictionary to executors. Match join + in-row verify +
-    * grid-stage prune are identical to [[forwardIndexedFat]]; the verified
-    * candidate frame (which carries the denormalized glon/glat) then flows
-    * through the SAME coalesceN the broadcast path uses, so the two are
-    * row-identical under the usual stackCap condition and share one oracle.
-    * The verified frame is persisted: coalesceN reads it once per level. */
-  def forwardIndexedMultiFat(docs: DataFrame, fatGrid: DataFrame,
-                             levels: Seq[IndexLevel] = DefaultLevels,
-                             k: Int = 5, stackCap: Int = 64,
-                             dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    val maxLen = maxNameTokens(fatGrid)
-    val windows = tokenWindowsPos(docs, maxLen)
-      .withColumn("phrase_id", xxhash64(col("phrase")))
-    val prefiltered = prefilterPhrases(windows, fatGrid, dictCeiling)
-    // in-row D4 verify as a RANGE residual (see [[forwardIndexedFat]]): the
-    // join stays keyed on phrase_id alone and the grid-prune window reuses
-    // the exchange
-    val verified = prefiltered.join(fatGrid.hint("shuffle_hash"),
-        prefiltered("phrase_id") === fatGrid("phrase_id") &&
-          col("phrase") <= col("name") && col("phrase") >= col("name"))
-      .drop(fatGrid("phrase_id"))
-      .withColumn("gr", row_number().over(
-        Window.partitionBy(col("doc_id"), col("phrase_id"), col("typ"))
-          .orderBy(col("relev_q").desc, col("score_q").desc, col("feature_id").asc)))
-      .filter(col("gr") <= stackCap)
-      .select(col("doc_id"), col("qlon"), col("qlat"),
-        col("feature_id").as("gid"), col("name"), col("typ"), col("score"),
-        col("glon"), col("glat"),
-        col("pos"), size(split(col("name"), " ")).as("plen"))
-      .persist()
-    rank(coalesceN(verified, levels), k, extraCols = Seq("chain"))
   }
 
   /** D5+C4: reverse geocode join — probe points equi-joined on the z-cell to
@@ -833,67 +768,6 @@ object Geocode {
       .filter(col("rank") <= limit)
       .select(col("event_id"), col("feature_id"), round(col("dist"), 3).as("dist_km"),
         col("is_inside"), col("rank"))
-  }
-
-  /** [[reversePip]] with per-tile pre-clipped polygons (north star: "WKB
-    * polygons pre-clipped to z14 tiles"): the cover-exploded index carries
-    * the geometry clipped to each cell, so the PIP stage touches only the
-    * tile-local ring fragments — at z14 a coastline polygon with 10^5
-    * vertices becomes a handful of vertices per tile. Row-identical to
-    * [[reversePip]] for tile-interior probes. */
-  def reversePipClipped(points: DataFrame, features: DataFrame, z: Int): DataFrame = {
-    val cover = features
-      .withColumn("cell", explode(F.tileCover(col("geom_wkb"), lit(z))))
-      .withColumn("clip_wkb", F.clipToCell(col("geom_wkb"), col("cell")))
-      .drop("geom_wkb")
-    val probes = points.withColumn("cell", F.cellAt(lit(z), col("elon"), col("elat")))
-    probes.join(cover, "cell")
-      .filter(F.pipWkb(col("clip_wkb"), col("elon"), col("elat")))
-  }
-
-  /** [[reversePip]] with explicit hot-cell salting (D7): probe-side count
-    * agg finds heavy cells (cities/coastlines), the exploded cover index is
-    * replicated ×s for those cells, probes salt deterministically on their
-    * row id. Row-identical to [[reversePip]]; use when the cell histogram
-    * is skewed and the join shuffles (non-broadcast index). */
-  def reversePipSalted(points: DataFrame, features: DataFrame, z: Int,
-                       s: Int = 8, hotK: Int = 16,
-                       hotThreshold: Long = 10000): DataFrame = {
-    import graft.pipeline.Skew
-    val cover = features
-      .withColumn("cell", explode(F.tileCover(col("geom_wkb"), lit(z))))
-    val probes = points.withColumn("cell", F.cellAt(lit(z), col("elon"), col("elat")))
-    val hot = Skew.hotKeys(probes, "cell", hotK, hotThreshold)
-    Skew.saltedJoin(probes, cover, "cell", "event_id", hot, s)
-      .filter(F.pipWkb(col("geom_wkb"), col("elon"), col("elat")))
-  }
-
-  /** D5 over the broadcast sorted cell→feature-id array (the north-star
-    * index structure): the probe side binary-searches the broadcast index
-    * inside the map stage — NO shuffle, no exploded cover frame. Equivalent
-    * results to [[reversePip]]; this is the path that wins when the cover
-    * index fits the broadcast ceiling (~10^8 entries). */
-  def reverseBcast(spark: org.apache.spark.sql.SparkSession, points: DataFrame,
-                   features: DataFrame, z: Int,
-                   cacheKey: Option[String] = None,
-                   coverCeiling: Long = BroadcastCoverCeiling): DataFrame = {
-    import graft.index.CellIndex
-    // ceiling probe IN CODE: count the exploded cover before collecting it —
-    // an over-ceiling index never reaches the driver; the operator degrades
-    // to the shuffled cell equi-join (reversePip), row-identical.
-    val coverN = memoCount(features
-      .select(col("feature_id"), explode(F.tileCover(col("geom_wkb"), lit(z))).as("cell")))
-    if (coverN > coverCeiling) return reversePip(points, features, z)
-    val data = cacheKey match {
-      case Some(key) => CellIndex.cached(s"$key@z$z")(CellIndex.buildFromFeatures(features, z))
-      case None => CellIndex.buildFromFeatures(features, z)
-    }
-    val bc = spark.sparkContext.broadcast(data)
-    val probes = points
-      .withColumn("cell", F.cellAt(lit(z), col("elon"), col("elat")))
-      .withColumn("feature_id", explode(CellIndex.lookupCol(col("cell"), bc)))
-    probes.join(broadcast(features), "feature_id")
-      .filter(F.pipWkb(col("geom_wkb"), col("elon"), col("elat")))
   }
 
   /** D6+G4: expanding-ring kNN — carmen's nearest-within-radius escalation.

@@ -216,118 +216,50 @@ object Queries {
   // to fwd_geocode, so it shares the oracle.
   // =================================================================
 
-  private val gazGridPath = new java.util.concurrent.atomic.AtomicReference[String](null)
+  private val gazGridPaths = scala.collection.mutable.Map.empty[String, String]
 
-  /** The gazetteer grid index as an on-disk parquet table (built once per
-    * JVM, sorted by phrase_id so the probe join scans a real index table —
-    * at the design point this is the Hilbert-range-partitioned table that
-    * IndexBuild.build writes per index epoch).
+  /** A gazetteer grid index as an on-disk parquet table (built once per JVM
+    * and name, sorted by phrase_id so the probe join scans a real index
+    * table — at the design point this is the Hilbert-range-partitioned
+    * table that IndexBuild.build writes per index epoch).
     *
     * Location: `SPARK_GRAFT_TMP` when set (cluster launches point it at a
     * shared scratch path), else a per-JVM java.nio temp dir — never a
     * hard-coded sandbox path. */
-  def gazGridParquet(spark: SparkSession): DataFrame = this.synchronized {
-    var p = gazGridPath.get
-    if (p == null) {
-      p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgrid")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgrid")
-          .resolve("gazgrid").toString)
-      graft.index.IndexBuild.gazetteerGrid(gazDf(spark), Geocode.ZPlace, Geocode.ZRegion)
+  private def gridParquet(spark: SparkSession, name: String, gaz: => DataFrame,
+                          levels: Seq[Geocode.IndexLevel]): DataFrame = this.synchronized {
+    val p = gazGridPaths.getOrElseUpdate(name, {
+      val p = sys.env.get("SPARK_GRAFT_TMP")
+        .map(t => s"$t/$name")
+        .getOrElse(java.nio.file.Files.createTempDirectory(s"graft-$name")
+          .resolve(name).toString)
+      graft.index.IndexBuild.gazetteerGrid(gaz, levels.map(l => (l.typ, l.zoom)))
         .coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
         .write.mode("overwrite").parquet(p)
-      gazGridPath.set(p)
-    }
+      p
+    })
     spark.read.parquet(p)
   }
+
+  /** The 2-level (region z8, place z12) gazetteer grid index. */
+  def gazGridParquet(spark: SparkSession): DataFrame =
+    gridParquet(spark, "gazgrid", gazDf(spark), Seq(
+      Geocode.IndexLevel("region", Geocode.ZRegion), Geocode.IndexLevel("place", Geocode.ZPlace)))
 
   def fwdGeocodeIndexed(spark: SparkSession, sfDir: String): DataFrame =
     Geocode.forwardIndexed(docPages(spark, sfDir), gazGridParquet(spark), gazDf(spark))
 
-  private val gazGridFatPath = new java.util.concurrent.atomic.AtomicReference[String](null)
+  /** The 4-level gazetteer grid index (one cell per feature at its type's
+    * zoom). */
+  def gazGridMultiParquet(spark: SparkSession): DataFrame =
+    gridParquet(spark, "gazgridm", gazMultiDf(spark), Geocode.DefaultLevels)
 
-  /** The FAT gazetteer grid index on disk (payload columns denormalized —
-    * [[graft.index.IndexBuild.gazetteerGridFat]]); same location policy as
-    * [[gazGridParquet]]. */
-  def gazGridFatParquet(spark: SparkSession): DataFrame = this.synchronized {
-    var p = gazGridFatPath.get
-    if (p == null) {
-      p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgridfat")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgridfat")
-          .resolve("gazgridfat").toString)
-      graft.index.IndexBuild.gazetteerGridFat(gazDf(spark), Geocode.ZPlace, Geocode.ZRegion)
-        .coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
-        .write.mode("overwrite").parquet(p)
-      gazGridFatPath.set(p)
-    }
-    spark.read.parquet(p)
-  }
-
-  /** Forward geocode over the FAT grid index: D4 verify in-row, no feature
-    * join — one fewer big-side exchange than fwd_geocode_indexed. Row-
-    * identical to fwd_geocode, shares its oracle. */
-  def fwdGeocodeFat(spark: SparkSession, sfDir: String): DataFrame =
-    Geocode.forwardIndexedFat(docPages(spark, sfDir), gazGridFatParquet(spark))
-
-  private val GazGridBucketedTable = "graft_gazgrid_fat_bucketed"
-
-  /** The fat grid index as a BUCKETED table (32 buckets on phrase_id): the
-    * index side of the match join arrives pre-hash-partitioned from disk, so
-    * the join plans ZERO exchange above the index scan — only the doc side
-    * shuffles (to the bucket count). At the design point this is the
-    * co-location story for the 10s-of-GB index: bucketing is decided once
-    * per index epoch at WRITE time, and every query against that epoch
-    * saves the index-side shuffle. Registered in the session catalog
-    * (bucket metadata lives there); rebuilt lazily per catalog. */
-  def gazGridFatBucketed(spark: SparkSession): DataFrame = this.synchronized {
-    if (!spark.catalog.tableExists(GazGridBucketedTable)) {
-      val p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgridfatb")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgridfatb")
-          .resolve("gazgridfatb").toString)
-      graft.index.IndexBuild.gazetteerGridFat(gazDf(spark), Geocode.ZPlace, Geocode.ZRegion)
-        .write.mode("overwrite")
-        .bucketBy(32, "phrase_id").sortBy("phrase_id")
-        .option("path", p)
-        .format("parquet")
-        .saveAsTable(GazGridBucketedTable)
-    }
-    spark.table(GazGridBucketedTable)
-  }
-
-  /** [[fwdGeocodeFat]] over the bucketed index table — same operator, the
-    * index-side exchange now eliminated by the table layout (PlanSpec pins
-    * it). Row-identical to fwd_geocode, shares its oracle. */
-  def fwdGeocodeBucketed(spark: SparkSession, sfDir: String): DataFrame =
-    Geocode.forwardIndexedFat(docPages(spark, sfDir), gazGridFatBucketed(spark))
-
-  private val gazGridMultiFatPath = new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  /** The 4-level gazetteer as a FAT grid index (one leaf cell per feature at
-    * its type's zoom — [[graft.index.IndexBuild.gazetteerGridFatLevels]]);
-    * same location policy as [[gazGridParquet]]. */
-  def gazGridMultiFatParquet(spark: SparkSession): DataFrame = this.synchronized {
-    var p = gazGridMultiFatPath.get
-    if (p == null) {
-      p = sys.env.get("SPARK_GRAFT_TMP")
-        .map(t => s"$t/gazgridmfat")
-        .getOrElse(java.nio.file.Files.createTempDirectory("graft-gazgridmfat")
-          .resolve("gazgridmfat").toString)
-      graft.index.IndexBuild.gazetteerGridFatLevels(gazMultiDf(spark),
-          Geocode.DefaultLevels.map(l => (l.typ, l.zoom)))
-        .coalesce(1).sortWithinPartitions("phrase_id", "cell", "feature_id")
-        .write.mode("overwrite").parquet(p)
-      gazGridMultiFatPath.set(p)
-    }
-    spark.read.parquet(p)
-  }
-
-  /** N-level stack coalesce over the BUILT fat index (no gazetteer
+  /** N-level stack coalesce over the BUILT grid index (no gazetteer
     * broadcast) — the at-scale form of fwd_geocode_multi. Row-identical to
     * it, shares its oracle. */
   def fwdGeocodeMultiIndexed(spark: SparkSession, sfDir: String): DataFrame =
-    Geocode.forwardIndexedMultiFat(docPages(spark, sfDir), gazGridMultiFatParquet(spark))
+    Geocode.forwardIndexedMulti(docPages(spark, sfDir), gazGridMultiParquet(spark),
+      gazMultiDf(spark))
 
   // =================================================================
   // E4: result-level dedupe — gazetteer with duplicate-name clones;
@@ -1118,6 +1050,16 @@ object Queries {
     val n = graft.index.TableIO.rowCount(spark, s"$sfDir/events.parquet")
     dbscanOf(dbscanPoints(spark, sfDir), n)
   }
+
+  /** [[dbscan]] with the D7 hot-cell salting on the eps-grid self-join:
+    * cells holding ≥ 5 points replicate ×4. At eps ∝ 1/√n an eps-cell
+    * averages ~0.8 points, so ≥ 5 is the hot tail at every SF (the
+    * histogram caps the hot set at its 16 heaviest cells). Row-identical
+    * to [[dbscan]]; shares its oracle. */
+  def dbscanSalted(spark: SparkSession, sfDir: String): DataFrame =
+    dbscanOf(dbscanPoints(spark, sfDir),
+      graft.index.TableIO.rowCount(spark, s"$sfDir/events.parquet"),
+      salt = 4, hotThreshold = 5L)
 
   /** [[dbscan]] core over any (id, xq, yq) milli-lattice point frame with
     * corpus size `n` supplied by the caller (from table metadata — never a

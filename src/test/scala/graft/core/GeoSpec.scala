@@ -158,41 +158,6 @@ class GeoSpec extends AnyFunSuite {
     assert(scoredist(100.0, 10.0) > scoredist(100.0, 20.0))
   }
 
-  test("clipRingToRect: PIP on clipped ring equals PIP on original for rect-interior points") {
-    var seed = 0xC11FBEEFL
-    def rnd(): Double = { seed = seed * 6364136223846793005L + 1442695040888963407L; ((seed >>> 11).toDouble / (1L << 53).toDouble) }
-    var trial = 0
-    while (trial < 60) {
-      // random star polygon around a random center
-      val cx = rnd() * 300 - 150; val cy = rnd() * 140 - 70
-      val nV = 6 + (rnd() * 20).toInt
-      val ring = new Array[Double](nV * 2)
-      var i = 0
-      while (i < nV) {
-        val ang = 2 * math.Pi * i / nV
-        val r = 1.0 + rnd() * 4.0
-        ring(2 * i) = cx + r * math.cos(ang)
-        ring(2 * i + 1) = cy + r * math.sin(ang)
-        i += 1
-      }
-      // random clip rect near the polygon
-      val w = cx - 3 + rnd() * 2; val e = w + 1 + rnd() * 4
-      val s0 = cy - 3 + rnd() * 2; val n = s0 + 1 + rnd() * 4
-      val clipped = clipRingToRect(ring, w, s0, e, n)
-      var probe = 0
-      while (probe < 40) {
-        // strictly interior to the rect (margin keeps off clip edges)
-        val px = w + 0.05 + rnd() * (e - w - 0.1)
-        val py = s0 + 0.05 + rnd() * (n - s0 - 0.1)
-        val orig = pointInRings(Array(ring), px, py)
-        val clip = clipped.nonEmpty && pointInRings(Array(clipped), px, py)
-        assert(orig == clip, s"trial $trial probe ($px,$py): orig=$orig clip=$clip")
-        probe += 1
-      }
-      trial += 1
-    }
-  }
-
   test("polysOverlap ≡ JTS positive-area intersection on random simple polygons") {
     val r = new Random(1234)
     var skipped = 0; var overlaps = 0; var checked = 0
@@ -234,19 +199,6 @@ class GeoSpec extends AnyFunSuite {
     // plus-sign cross: interiors overlap, NO vertex of either inside the other
     val hbar = poly(Array(-1.0, 4.0, 11.0, 4.0, 11.0, 6.0, -1.0, 6.0, -1.0, 4.0))
     assert(Geo.polysOverlap(outer, hbar) && Geo.polysOverlap(hbar, outer))
-  }
-
-  test("clipToCell: empty when disjoint, bounded by cell when overlapping") {
-    val cell = CellMath.lonLatToCell(8, 10.0, 50.0)
-    val (w, s0, e, n) = CellMath.cellBounds(cell)
-    val far = Geom(Geom.Poly, Array(Array(100.0, -50.0, 101.0, -50.0, 101.0, -49.0, 100.0, -49.0, 100.0, -50.0)))
-    assert(clipToCell(far, cell).rings.isEmpty)
-    val big = Geom(Geom.Poly, Array(Array(w - 5, s0 - 5, e + 5, s0 - 5, e + 5, n + 5, w - 5, n + 5, w - 5, s0 - 5)))
-    val c = clipToCell(big, cell)
-    assert(c.rings.length == 1)
-    c.rings(0).grouped(2).foreach { case Array(x, y) =>
-      assert(x >= w - 1e-9 && x <= e + 1e-9 && y >= s0 - 1e-9 && y <= n + 1e-9)
-    }
   }
 
   test("polysOverlap: degenerate lattice coincidences are decided EXACTLY") {

@@ -46,34 +46,32 @@ class FallbackSpec extends SparkTestBase {
     assert(a.nonEmpty && a == b)
   }
 
-  test("forwardIndexedFat: Bloom-tier prefilter past the exact ceiling, row-identical") {
+  test("indexed forwards: the three prefilter tiers are row-identical") {
+    import org.apache.spark.sql.DataFrame
+    import graft.queries.Queries
     val docs = Synth.docPages(spark, sf)
-    val grid = graft.queries.Queries.gazGridFatParquet(spark)
-    val n = grid.select("phrase_id").distinct().count()
-    assert(n >= 2, "fixture must have a multi-phrase dictionary")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).sorted.toSeq
-    val exact = Geocode.forwardIndexedFat(docs, grid)
-    // dict in (ceil, 8*ceil] → tier 2 (Bloom); beyond 8*ceil → tier 3 (none)
-    val bloom = Geocode.forwardIndexedFat(docs, grid, dictCeiling = n - 1)
-    val none = Geocode.forwardIndexedFat(docs, grid, dictCeiling = 0)
-    assert(exact.queryExecution.executedPlan.toString.contains("long_set_contains"))
-    assert(bloom.queryExecution.executedPlan.toString.contains("bloom_might_contain"))
-    val noPlan = none.queryExecution.executedPlan.toString
-    assert(!noPlan.contains("long_set_contains") && !noPlan.contains("bloom_might_contain"))
-    val a = rows(exact)
-    assert(a.nonEmpty && a == rows(bloom) && a == rows(none))
-  }
-
-  test("reverseBcast: over-ceiling cover degrades to the shuffled cell join") {
-    val pts = Synth.eventPoints(spark, sf)
-    val feats = Synth.custFeatures(spark, sf)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("event_id", "feature_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val a = rows(Geocode.reverseBcast(spark, pts, feats, 8))
-    val b = rows(Geocode.reverseBcast(spark, pts, feats, 8, coverCeiling = 1))
-    val c = rows(Geocode.reversePip(pts, feats, 8))
-    assert(a == c && b == c)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // the 2-level and the N-level indexed forward share one match stage;
+    // run the three prefilter tiers through both
+    def tiers(name: String, grid: DataFrame, run: Long => DataFrame): Unit = {
+      val n = grid.select("phrase_id").distinct().count()
+      assert(n >= 2, s"$name: fixture must have a multi-phrase dictionary")
+      val exact = run(Geocode.BroadcastDictCeiling)
+      // dict in (ceil, 8*ceil] → tier 2 (Bloom); beyond 8*ceil → tier 3 (none)
+      val bloom = run(n - 1)
+      val none = run(0)
+      assert(exact.queryExecution.executedPlan.toString.contains("long_set_contains"), name)
+      assert(bloom.queryExecution.executedPlan.toString.contains("bloom_might_contain"), name)
+      val noPlan = none.queryExecution.executedPlan.toString
+      assert(!noPlan.contains("long_set_contains") && !noPlan.contains("bloom_might_contain"), name)
+      val a = rows(exact)
+      assert(a.nonEmpty && a == rows(bloom) && a == rows(none), name)
+    }
+    val grid = Queries.gazGridParquet(spark)
+    tiers("2-level", grid,
+      c => Geocode.forwardIndexed(docs, grid, Synth.gazDf(spark), dictCeiling = c))
+    val multi = Queries.gazGridMultiParquet(spark)
+    tiers("N-level", multi,
+      c => Geocode.forwardIndexedMulti(docs, multi, Synth.gazMultiDf(spark), dictCeiling = c))
   }
 }

@@ -6,7 +6,7 @@ import graft.ops.Geocode
 import graft.synth.Synth
 
 /** User-facing Geocoder API: options semantics, place_name formatting,
-  * reverse with kNN fallback; salted reverse equivalence. */
+  * reverse with kNN fallback; indexed-forward and salted-join equivalence. */
 class GeocoderSpec extends SparkTestBase {
 
   private def onePage = {
@@ -113,16 +113,7 @@ class GeocoderSpec extends SparkTestBase {
     assert(a.nonEmpty && a == b)
   }
 
-  test("forward over the FAT grid index is row-identical to the broadcast path") {
-    import graft.queries.Queries
-    val a = Queries.fwdGeocode(spark, "/root/testdata/sf0.001").collect()
-      .map(_.toString).sorted.toSeq
-    val b = Queries.fwdGeocodeFat(spark, "/root/testdata/sf0.001").collect()
-      .map(_.toString).sorted.toSeq
-    assert(a.nonEmpty && a == b)
-  }
-
-  test("N-level forward over the fat multi index is row-identical to the broadcast path") {
+  test("N-level forward over the built grid index is row-identical") {
     import graft.queries.Queries
     val a = Queries.fwdGeocodeMulti(spark, "/root/testdata/sf0.001").collect()
       .map(_.toString).sorted.toSeq
@@ -257,26 +248,6 @@ class GeocoderSpec extends SparkTestBase {
     assert(chainOf(2L, 101L) == "601>101")
     // doc 3: no country mentioned -> region stacks straight on the continent
     assert(chainOf(3L, 1L) == "501>1")
-  }
-
-  test("pre-clipped reverse PIP equals unclipped") {
-    val pts = Synth.eventPoints(spark, "/root/testdata/sf0.001")
-    val feats = Synth.custFeatures(spark, "/root/testdata/sf0.001")
-    val a = Geocode.reversePipClipped(pts, feats, 8)
-      .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Geocode.reversePip(pts, feats, 8)
-      .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
-  }
-
-  test("salted reverse PIP equals unsalted") {
-    val pts = Synth.eventPoints(spark, "/root/testdata/sf0.001")
-    val feats = Synth.custFeatures(spark, "/root/testdata/sf0.001")
-    val a = Geocode.reversePipSalted(pts, feats, 8, s = 4, hotK = 8, hotThreshold = 2)
-      .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Geocode.reversePip(pts, feats, 8)
-      .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
   }
 
   test("poly_overlap: blocked self-join ≡ brute θ-join, pairs exactly-once") {

@@ -26,16 +26,6 @@ class IndexSpec extends SparkTestBase {
     assert(data.lookup(Long.MaxValue).isEmpty)
   }
 
-  test("reverseBcast equals reversePip (shuffle-free path, same rows)") {
-    val pts = Synth.eventPoints(spark, "/root/testdata/sf0.001")
-    val feats = Synth.custFeatures(spark, "/root/testdata/sf0.001")
-    val a = Geocode.reverseBcast(spark, pts, feats, 8)
-      .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Geocode.reversePip(pts, feats, 8)
-      .select("event_id", "feature_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a == b)
-  }
-
   test("PhraseDict prefix range equals linear scan") {
     val names = Synth.gazetteer.map(_.name)
     val dict = PhraseDict.build(names)

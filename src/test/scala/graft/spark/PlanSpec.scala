@@ -75,50 +75,20 @@ class PlanSpec extends SparkTestBase {
     val p = plan(Queries.fwdGeocodeIndexed(spark, "/root/testdata/sf0.001"))
     assert(!p.contains("BroadcastHashJoin") && !p.contains("BroadcastNestedLoopJoin"),
       "indexed forward path must not broadcast the gazetteer/index in any form")
-    assert(p.contains("ShuffledHashJoin"), "phrase_id/verify joins should shuffle-hash")
-  }
-
-  test("fwd_geocode_fat: verify is in-row — one fewer join/exchange than the skinny index") {
-    // FormattedMode lists each physical node ONCE in the details section
-    // (the simple toString re-prints the persisted subtree per
-    // InMemoryTableScan consumer, triple-counting the cached match join)
-    def fmt(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    val pFat = fmt(Queries.fwdGeocodeFat(spark, "/root/testdata/sf0.001"))
-    val pSkinny = fmt(Queries.fwdGeocodeIndexed(spark, "/root/testdata/sf0.001"))
-    assert(!pFat.contains("BroadcastHashJoin") && !pFat.contains("BroadcastNestedLoopJoin"),
-      "fat-index path must not broadcast the index in any form")
-    assert(pFat.contains("long_set_contains"),
+    // the tree string re-prints the persisted match subtree once per
+    // consumer; each physical join prints with its own key attribute ids,
+    // so distinct join lines count each join once
+    val joins = "ShuffledHashJoin.*".r.findAllIn(p).toSet
+    assert(joins.size == 3,
+      s"expected exactly 3 shuffle joins (phrase match, feature verify, stack); got $joins")
+    // the windows' prefilter sits under the doc-side phrase_id exchange with
+    // no exchange in between: it runs in the map stage that feeds the shuffle
+    val lines = p.linesIterator.toIndexedSeq
+    val exchange = lines.indexWhere(_.contains("Exchange hashpartitioning(phrase_id"))
+    val filter = lines.indexWhere(_.contains("Filter long_set_contains(xxhash64"), exchange)
+    assert(exchange >= 0 && filter > exchange &&
+      !lines.slice(exchange + 1, filter).exists(_.contains("Exchange")),
       "semi-join reduction filter must run before the grid shuffle")
-    def nJoins(p: String) = "\\(\\d+\\) ShuffledHashJoin".r.findAllIn(p).size
-    def nExch(p: String) = "\\(\\d+\\) Exchange".r.findAllIn(p).size
-    assert(nJoins(pFat) == 2,
-      s"fat path should have exactly 2 shuffle joins (match, stack); got ${nJoins(pFat)}")
-    assert(nJoins(pSkinny) == 3, "skinny path pays the feature verify-join")
-    assert(nExch(pFat) < nExch(pSkinny),
-      s"fat path must shuffle strictly less (${nExch(pFat)} vs ${nExch(pSkinny)})")
-    // the grid-prune window must REUSE the match join's phrase_id exchange:
-    // verify stays a residual predicate, never a join key (re-keying the
-    // shuffle on (phrase_id, phrase) would force a window exchange of its own)
-    assert("hashpartitioning\\([^)]*phrase#".r.findAllIn(pFat).isEmpty,
-      "phrase must not become a shuffle key (verify is residual)")
-  }
-
-  test("fwd_geocode_bucketed: the bucketed index arrives pre-partitioned — one fewer exchange") {
-    def fmt(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-    val pBuck = fmt(Queries.fwdGeocodeBucketed(spark, "/root/testdata/sf0.001"))
-    val pFat = fmt(Queries.fwdGeocodeFat(spark, "/root/testdata/sf0.001"))
-    def nExch(p: String) = "\\(\\d+\\) Exchange".r.findAllIn(p).size
-    assert(pBuck.contains("SelectedBucketsCount"),
-      s"index scan must be a bucketed scan:\n${pBuck.take(800)}")
-    assert(nExch(pBuck) == nExch(pFat) - 1,
-      s"bucket layout must eliminate exactly the index-side exchange (${nExch(pBuck)} vs ${nExch(pFat)})")
-    // row-identity with the parquet fat path (both share fwd_geocode's oracle,
-    // but the bucketed catalog table never reaches the DuckDB gate directly)
-    val a = Queries.fwdGeocodeBucketed(spark, "/root/testdata/sf0.001").collect().toSet
-    val b = Queries.fwdGeocodeFat(spark, "/root/testdata/sf0.001").collect().toSet
-    assert(a == b, "bucketed path must be row-identical to the fat parquet path")
   }
 
   test("dbscan: salted self-join keys the exchange on (ck, _salt); unsalted is shuffle-hash on ck") {
