@@ -111,7 +111,10 @@ final class Geocoder(spark: SparkSession, gaz: DataFrame,
   def reverse(points: DataFrame,
               typed: Seq[(String, DataFrame, Int)],
               knnZ: Int = 8): DataFrame = {
-    val pip = Geocode.contextChain(points, typed)
+    // the chain feeds the output union and the unmatched anti-join, and
+    // knnExpanding's eager rounds re-read the latter: persist it so one
+    // call evaluates it once
+    val pip = Geocode.contextChain(points, typed).persist()
       .withColumn("via", lit("pip"))
     val unmatched = points.join(pip.select("event_id").distinct(),
       Seq("event_id"), "left_anti")

@@ -195,25 +195,4 @@ object Text {
     val toks = phrase.split(' ')
     (1 to toks.length).map(k => toks.take(k).mkString(" ")).toArray
   }
-
-  /** Contiguous token windows of a query, longest first, with coverage
-    * bitmask. Returns (phrase, mask, startPos). Query capped at 20 tokens
-    * (upstream caps similarly). */
-  def subqueries(query: String, maxLen: Int = 20): Array[(String, Long, Int)] = {
-    val toks = applyTokenRules(tokenize(query)).take(maxLen)
-    val nT = toks.length
-    val out = new ArrayBuffer[(String, Long, Int)](nT * (nT + 1) / 2)
-    var len = nT
-    while (len >= 1) {
-      var start = 0
-      while (start + len <= nT) {
-        val phrase = toks.slice(start, start + len).mkString(" ")
-        val mask = ((1L << len) - 1L) << start
-        out += ((phrase, mask, start))
-        start += 1
-      }
-      len -= 1
-    }
-    out.toArray
-  }
 }

@@ -320,90 +320,19 @@ object Exprs {
     override protected def withNewChildInternal(c: Expression): PhraseFormExpr = copy(child = c)
   }
 
-  /** mention_windows(text): UDTF emitting the DISTINCT token windows of
-    * lengths 1..maxLen — the B4 subquery generator fused into one pass
-    * (tokenize → windows → dedupe) with no intermediate Catalyst arrays.
-    * Row-identical to explode(array_distinct(unigrams ++ bigrams)). */
-  case class MentionWindows(child: Expression, maxLen: Int)
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) :: Nil)
-    override def prettyName: String = "mention_windows"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      val toks = Text.tokenize(t.toString)
-      val seen = new java.util.LinkedHashSet[String]()
-      var len = 1
-      while (len <= maxLen) {
-        var i = 0
-        while (i + len <= toks.length) {
-          if (len == 1) seen.add(toks(i))
-          else {
-            val sb = new java.lang.StringBuilder(toks(i))
-            var j = 1
-            while (j < len) { sb.append(' ').append(toks(i + j)); j += 1 }
-            seen.add(sb.toString)
-          }
-          i += 1
-        }
-        len += 1
-      }
-      val it = seen.iterator()
-      new Iterator[InternalRow] {
-        override def hasNext: Boolean = it.hasNext
-        override def next(): InternalRow =
-          InternalRow(UTF8String.fromString(it.next()))
-      }
-    }
-    override protected def withNewChildInternal(c: Expression): MentionWindows =
-      copy(child = c)
-  }
-
-  /** window_strings(text): the DISTINCT space-joined token windows of the
-    * given EXACT lengths — native single pass feeding a built-in explode
-    * (the array-HOF form — nested transform/array_join/array_distinct
-    * lambdas — is interpreted and was measured at 2.5× the whole consuming
-    * query). Distinctness is per row, which equals per (doc_id, w)
-    * dedup downstream without any exchange. */
-  case class WindowStrings(child: Expression, lengths: Seq[Int])
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "window_strings"
-    override def nullSafeEval(s: Any): Any = {
-      val toks = Text.tokenize(s.toString)
-      val seen = new java.util.LinkedHashSet[String]()
-      lengths.foreach { len =>
-        var i = 0
-        while (i + len <= toks.length) {
-          val sb = new java.lang.StringBuilder(toks(i))
-          var j = 1
-          while (j < len) { sb.append(' ').append(toks(i + j)); j += 1 }
-          seen.add(sb.toString)
-          i += 1
-        }
-      }
-      val out = new Array[Any](seen.size)
-      val it = seen.iterator()
-      var i = 0
-      while (it.hasNext) { out(i) = UTF8String.fromString(it.next()); i += 1 }
-      new GenericArrayData(out)
-    }
-    override protected def withNewChildInternal(c: Expression): WindowStrings =
-      copy(child = c)
-  }
-
   /** window_pos(text): the DISTINCT space-joined token windows of the given
     * EXACT lengths, each with the 1-BASED TOKEN INDEX of its FIRST
-    * occurrence — array<struct<phrase,pos>>. The positional sibling of
-    * [[WindowStrings]] (same single native pass + built-in explode shape;
+    * occurrence — array<struct<phrase,pos>>. The one window kernel (B4):
+    * a single native pass feeding a built-in explode (the array-HOF form —
+    * nested transform/array_join/array_distinct lambdas — is interpreted;
     * the in-row first-occurrence dedup is a hashmap, linear, where the HOF
-    * equivalent is a quadratic array_position scan per window). `pos` feeds
-    * carmen's stack-relevance penalties (gap / out-of-order mentions —
-    * upstream verifymatch [U]): the oracle mirror recovers the same index
-    * from `strpos(' '||text||' ', ' '||name||' ')` space-counting, valid
-    * because corpus text is single-space normalized tokens. */
+    * equivalent is a quadratic array_position scan per window). Per-row
+    * distinctness equals a per (doc_id, phrase) dedup downstream without
+    * any exchange. `pos` feeds carmen's stack-relevance penalties (gap /
+    * out-of-order mentions — upstream verifymatch [U]): the oracle mirror
+    * recovers the same index from `strpos(' '||text||' ', ' '||name||' ')`
+    * space-counting, valid because corpus text is single-space normalized
+    * tokens. */
   case class WindowPos(child: Expression, lengths: Seq[Int])
       extends UnaryExpression with CodegenFallback {
     override def dataType: DataType = ArrayType(
@@ -444,7 +373,7 @@ object Exprs {
     * [[graft.core.Text.tokenize]], mirroring DuckDB `string_split`. One
     * native pass replacing a transform∘sequence∘concat_ws∘array_distinct
     * HOF pile-up that ran per shingle position (interpreted; see the
-    * del_keys/window_strings precedent), and the exploded payload carries
+    * del_keys/window_pos precedent), and the exploded payload carries
     * 8-byte hashes instead of n-token strings. */
   case class ShingleHashes(child: Expression, n: Int)
       extends UnaryExpression with CodegenFallback {
@@ -503,78 +432,6 @@ object Exprs {
       new GenericArrayData(out)
     }
     override protected def withNewChildInternal(c: Expression): DelKeys = copy(child = c)
-  }
-
-  /** ac_mentions(text): UDTF emitting the DISTINCT gazetteer phrases that
-    * occur in the text as contiguous token subsequences, via a broadcast
-    * Aho–Corasick automaton — one pass over the token stream regardless of
-    * the longest name's token count (the B8 matcher for big dictionaries
-    * with long names; window generation multiplies rows by maxLen). */
-  case class AcMentions(child: Expression,
-                        bc: org.apache.spark.broadcast.Broadcast[graft.core.AhoCorasickData])
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) :: Nil)
-    override def prettyName: String = "ac_mentions"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      bc.value.matchTokens(Text.tokenize(t.toString)).iterator
-        .map(p => InternalRow(UTF8String.fromString(p)))
-    }
-    override protected def withNewChildInternal(c: Expression): AcMentions =
-      copy(child = c)
-  }
-
-  /** Per-executor automaton memo for [[AcMentionsLazy]], keyed by broadcast
-    * id: the trie is built ONCE per executor JVM from the broadcast name
-    * array, never serialized from the driver (a 10^7-name automaton is ~10×
-    * its name payload in pointer-heavy trie nodes — shipping the flat
-    * string array and building locally is the scale-correct shape). */
-  private object AcAutomatonCache {
-    private val memo =
-      new java.util.concurrent.ConcurrentHashMap[Long, graft.core.AhoCorasickData]()
-    def get(bc: org.apache.spark.broadcast.Broadcast[Seq[String]]): graft.core.AhoCorasickData =
-      memo.computeIfAbsent(bc.id, _ => graft.core.AhoCorasick.build(bc.value))
-  }
-
-  /** [[AcMentions]] over a broadcast NAME ARRAY instead of a prebuilt
-    * automaton — row-identical; the automaton is constructed lazily on each
-    * executor (see [[AcAutomatonCache]]). */
-  case class AcMentionsLazy(child: Expression,
-                            bc: org.apache.spark.broadcast.Broadcast[Seq[String]])
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) :: Nil)
-    override def prettyName: String = "ac_mentions_lazy"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      AcAutomatonCache.get(bc).matchTokens(Text.tokenize(t.toString)).iterator
-        .map(p => InternalRow(UTF8String.fromString(p)))
-    }
-    override protected def withNewChildInternal(c: Expression): AcMentionsLazy =
-      copy(child = c)
-  }
-
-  /** [[AcMentionsLazy]] emitting (phrase, pos) — pos the 1-based token index
-    * of the phrase's first occurrence, identical to [[WindowPos]]'s, so the
-    * AC and window matchers stay row-identical with penalties on. */
-  case class AcMentionsPosLazy(child: Expression,
-                               bc: org.apache.spark.broadcast.Broadcast[Seq[String]])
-      extends UnaryExpression with Generator with CodegenFallback {
-    override def elementSchema: StructType =
-      StructType(StructField("phrase", StringType, nullable = false) ::
-        StructField("pos", IntegerType, nullable = false) :: Nil)
-    override def prettyName: String = "ac_mentions_pos_lazy"
-    override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-      val t = child.eval(input)
-      if (t == null) return Iterator.empty
-      AcAutomatonCache.get(bc).matchTokensPos(Text.tokenize(t.toString)).iterator
-        .map { case (p, pos) => InternalRow(UTF8String.fromString(p), pos) }
-    }
-    override protected def withNewChildInternal(c: Expression): AcMentionsPosLazy =
-      copy(child = c)
   }
 
   // ---------------------------------------------------------------
@@ -1001,14 +858,6 @@ object F {
   def extractText(html: Column): Column = c(ExtractText(x(html)))
   def tokenize(s: Column): Column = c(TokenizeExpr(x(s)))
   def phraseForm(s: Column): Column = c(PhraseFormExpr(x(s)))
-  def mentionWindows(s: Column, maxLen: Int = 2): Column =
-    c(MentionWindows(x(s), maxLen))
-  def acMentions(s: Column,
-                 bc: org.apache.spark.broadcast.Broadcast[graft.core.AhoCorasickData]): Column =
-    c(AcMentions(x(s), bc))
-  def acMentionsLazy(s: Column,
-                     bc: org.apache.spark.broadcast.Broadcast[Seq[String]]): Column =
-    c(AcMentionsLazy(x(s), bc))
   def docFingerprint(s: Column): Column = c(DocFingerprint(x(s)))
   def mix64(v: Column): Column = c(Mix64(x(v)))
   def fnv1a64(s: Column): Column = c(Fnv1a64(x(s)))
@@ -1027,13 +876,8 @@ object F {
   def dtwCells(a: Column, b: Column): Column = c(DtwCells(x(a), x(b)))
   def frechetCells(a: Column, b: Column): Column = c(FrechetCells(x(a), x(b)))
   def hull2d(points: Column): Column = c(Hull2D(x(points)))
-  def windowStrings(text: Column, lengths: Seq[Int]): Column =
-    c(WindowStrings(x(text), lengths))
   def windowPos(text: Column, lengths: Seq[Int]): Column =
     c(WindowPos(x(text), lengths))
-  def acMentionsPosLazy(s: Column,
-                        bc: org.apache.spark.broadcast.Broadcast[Seq[String]]): Column =
-    c(AcMentionsPosLazy(x(s), bc))
   def shingleHashes(text: Column, n: Int): Column =
     c(ShingleHashes(x(text), n))
   def delKeys(tok: Column): Column = c(DelKeys(x(tok)))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.F
@@ -89,30 +89,6 @@ object Geocode {
     } else windows
   }
 
-  /** B4: the DISTINCT contiguous token windows (lengths 1..maxLen) of each
-    * doc's text, one row per (doc, window phrase). Map-side only: built with
-    * array higher-order functions + explode so the whole stage stays inside
-    * whole-stage codegen (measured ~1.7× faster than a fused CodegenFallback
-    * Generator — see BENCH.md). */
-  def tokenWindows(docs: DataFrame, maxLen: Int, extraCols: Seq[String] = Seq("qlon", "qlat")): DataFrame = {
-    val toks = docs.withColumn("toks", F.tokenize(col("text")))
-    def winsOfLen(len: Int): Column =
-      if (len == 1) col("toks")
-      else if (len == 2)
-        // zip_with shape measured fastest for the dominant bigram case
-        zip_with(
-          slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
-          slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-          (a, b) => concat(a, lit(" "), b))
-      else when(size(col("toks")) >= len,
-        transform(sequence(lit(1), size(col("toks")) - lit(len - 1)),
-          i => array_join(slice(col("toks"), i, lit(len)), " ")))
-        .otherwise(array().cast("array<string>"))
-    val wins = array_distinct(concat((1 to maxLen).map(winsOfLen): _*))
-    toks.select(col("doc_id") +: extraCols.map(col) :+
-      explode(wins).as("phrase"): _*)
-  }
-
   /** Carmen's stack-relevance penalties (upstream verifymatch/spatialmatch
     * [U] — tree empty at survey time, constants FROZEN here and documented):
     * a stacked pair loses GapPenalty when its two mentions are non-adjacent
@@ -124,10 +100,10 @@ object Geocode {
   final val GapPenalty = 0.01
   final val OrderPenalty = 0.01
 
-  /** [[tokenWindows]] with each phrase's first-occurrence 1-based token
-    * index, via the native [[graft.functions.Exprs.WindowPos]] pass (the
-    * in-row first-occurrence dedup is a linear hashmap; the HOF equivalent
-    * is a quadratic array_position scan per window). */
+  /** B4: the DISTINCT contiguous token windows (lengths 1..maxLen) of each
+    * doc's text, one row per (doc, window phrase), each with its
+    * first-occurrence 1-based token index `pos` — the one window generator,
+    * via the native [[graft.functions.Exprs.WindowPos]] pass. Map-side only. */
   def tokenWindowsPos(docs: DataFrame, maxLen: Int,
                       extraCols: Seq[String] = Seq("qlon", "qlat")): DataFrame =
     docs.select(col("doc_id") +: extraCols.map(col) :+
@@ -156,7 +132,8 @@ object Geocode {
   /** B4+B8+D1: mention extraction via token windows matched against a
     * broadcast gazetteer (the literal-gazetteer demo path; the at-scale path
     * is [[forwardIndexed]] which equi-joins phrase ids against the built
-    * grid index instead of broadcasting names).
+    * grid index instead of broadcasting names). The window length is the
+    * gazetteer's [[maxNameTokens]], so names of any token count match.
     *
     * Semantics: a gazetteer name matches iff its token sequence is a
     * contiguous subsequence of the document's token sequence (equivalently,
@@ -164,20 +141,7 @@ object Geocode {
     */
   def mentions(docs: DataFrame, gaz: DataFrame,
                extraCols: Seq[String] = Seq("qlon", "qlat"),
-               dictCeiling: Long = BroadcastDictCeiling): DataFrame =
-    // auto-switch: with long names the window path emits one window set per
-    // length 1..maxLen (5-token names = 5× explode volume) while the
-    // automaton stays one pass — measured crossover ≈ 3 (BENCH.md). The AC
-    // path needs the broadcast dictionary, so over-ceiling stays on windows.
-    if (maxNameTokens(gaz) > 3 && memoCount(gaz) <= dictCeiling)
-      mentionsAC(docs, gaz, extraCols, dictCeiling)
-    else mentionsWindows(docs, gaz, extraCols, dictCeiling)
-
-  /** The raw window-join matcher (see [[mentions]] for the dispatching
-    * surface; this stays public as the AC equivalence-test baseline). */
-  def mentionsWindows(docs: DataFrame, gaz: DataFrame,
-                      extraCols: Seq[String] = Seq("qlon", "qlat"),
-                      dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
+               dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
     // ceiling probe: an over-ceiling gazetteer shuffles on the phrase key
     // instead of broadcasting (the forwardIndexed grid join is the preferred
     // at-scale form; this keeps the literal-gazetteer surface correct too)
@@ -185,34 +149,6 @@ object Geocode {
       if (memoCount(gaz) <= dictCeiling) broadcast(gaz) else gaz.hint("shuffle_hash")
     tokenWindowsPos(docs, maxNameTokens(gaz), extraCols)
       .join(gazSide, col("phrase") === col("name"))
-      .withColumn("w", size(split(col("name"), " ")) / lit(3.0))
-      .withColumn("plen", size(split(col("name"), " ")))
-  }
-
-  /** B8 alternative matcher: mention extraction via a broadcast token-level
-    * Aho–Corasick automaton — ONE pass over each doc's token stream,
-    * independent of the longest gazetteer name (window generation emits one
-    * window set per length 1..maxLen; with 5-token names that is 5× the
-    * explode volume). Row-identical to [[mentions]] (equivalence-tested);
-    * the trade is a CodegenFallback Generator (breaks the codegen span —
-    * measured slower for maxLen ≤ 2, the win arrives with long names). */
-  def mentionsAC(docs: DataFrame, gaz: DataFrame,
-                 extraCols: Seq[String] = Seq("qlon", "qlat"),
-                 dictCeiling: Long = BroadcastDictCeiling): DataFrame = {
-    import graft.core.AhoCorasick
-    // ceiling probe IN CODE: an automaton over an over-ceiling dictionary
-    // cannot ship to executors — fall back to the window equi-join (which
-    // itself shuffles past the ceiling). Row-identical (equivalence-tested).
-    if (memoCount(gaz) > dictCeiling) return mentions(docs, gaz, extraCols, dictCeiling)
-    // names ship as a broadcast STRING ARRAY (the dictionary, same payload
-    // PhraseDict broadcasts); the automaton is built lazily once per
-    // executor from that array — the driver never serializes trie nodes
-    val names = gaz.select(col("name")).collect().map(_.getString(0)).toSeq
-    val bc = docs.sparkSession.sparkContext.broadcast(names)
-    docs
-      .select(col("doc_id") +: extraCols.map(col) :+
-        F.acMentionsPosLazy(col("text"), bc).as(Seq("phrase", "pos")): _*)
-      .join(broadcast(gaz), col("phrase") === col("name"))
       .withColumn("w", size(split(col("name"), " ")) / lit(3.0))
       .withColumn("plen", size(split(col("name"), " ")))
   }

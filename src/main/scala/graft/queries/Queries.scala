@@ -5290,7 +5290,8 @@ object Queries {
     // a full dropDuplicates SHUFFLE of every window row with zero exchanges
     // before the broadcast join.
     val wins = docs
-      .select(col("doc_id"), explode(F.windowStrings(col("text"), lengths)).as("w"))
+      .select(col("doc_id"), explode(F.windowPos(col("text"), lengths)).as("wp"))
+      .select(col("doc_id"), col("wp.phrase").as("w"))
       .withColumn("wtoks", split(col("w"), " "))
       .withColumn("len_l", size(col("wtoks")))
     val winKeys = wins
@@ -6577,7 +6578,15 @@ object Queries {
     }
     val eff = effRows.toDF("elang", "gid", "ename", "used_lang")
     val maxLen = effRows.map(_._3.count(_ == ' ') + 1).max
-    Geocode.tokenWindows(docs, maxLen, extraCols = Seq("lang"))
+    // A language outside the shipped list would silently lose the matches
+    // the oracle keeps (its docs meet no dict row): fail the query instead,
+    // per doc row, naming the language. A null lang passes unchecked.
+    val checked = docs.withColumn("lang",
+      when(col("lang").isNotNull && !col("lang").isin(langs: _*),
+        raise_error(concat(lit("lang_fallback: language '"), col("lang"),
+          lit(s"' is not in FallbackLangs ${langs.mkString(",")}"))))
+        .otherwise(col("lang")))
+    Geocode.tokenWindowsPos(checked, maxLen, extraCols = Seq("lang"))
       .join(broadcast(eff),
         col("lang") === col("elang") && col("phrase") === col("ename"))
       .select(col("doc_id"), col("gid"), col("used_lang"))

@@ -68,14 +68,4 @@ class TextSpec extends AnyFunSuite {
   test("prefixPhrases") {
     assert(prefixPhrases("a b c").sameElements(Array("a", "a b", "a b c")))
   }
-
-  test("subqueries: windows longest-first with coverage masks") {
-    val sq = subqueries("one two three")
-    assert(sq.length == 6)
-    assert(sq(0) == (("one two three", 7L, 0)))
-    assert(sq(1) == (("one two", 3L, 0)))
-    assert(sq(2) == (("two three", 6L, 1)))
-    assert(sq(3) == (("one", 1L, 0)))
-    assert(sq(5) == (("three", 4L, 2)))
-  }
 }

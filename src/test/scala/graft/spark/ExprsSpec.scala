@@ -75,23 +75,6 @@ class ExprsSpec extends SparkTestBase {
     assert(r.getString(2) == Text.phraseForm("Hash JOIN, fast!"))
   }
 
-  test("mention_windows generator equals the array-HOF window derivation") {
-    import spark.implicits._
-    val docs = Seq("the hash join data pipeline", "one", "a a a b").toDF("text")
-    val viaGen = docs.select(col("text"), F.mentionWindows(col("text")).as("phrase"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val viaHof = docs
-      .withColumn("toks", F.tokenize(col("text")))
-      .select(col("text"), explode(array_distinct(concat(
-        col("toks"),
-        zip_with(
-          slice(col("toks"), lit(1), greatest(size(col("toks")) - 1, lit(0))),
-          slice(col("toks"), lit(2), greatest(size(col("toks")) - 1, lit(0))),
-          (a, b) => concat(a, lit(" "), b))))).as("phrase"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(viaGen == viaHof)
-  }
-
   test("del_keys equals the HOF deletion-neighborhood derivation") {
     import spark.implicits._
     val toks = Seq("paris", "a", "", "tokyo", "aa").toDF("tok")
@@ -119,13 +102,23 @@ class ExprsSpec extends SparkTestBase {
     got.foreach(r => assert(r.getInt(0) == r.getInt(1)))
   }
 
-  test("window_strings equals per-length slicing with per-doc dedup") {
+  test("window_pos equals per-length slicing; pos is the first occurrence") {
     import spark.implicits._
-    val docs = Seq("the hash join data pipeline", "one", "a a a b", "").toDF("text")
+    val docs = Seq("the hash join data pipeline", "one", "a a a b", "", "b a b a b a").toDF("text")
     val lengths = Seq(2, 3)
-    val viaNative = docs.select(col("text"),
-        explode(F.windowStrings(col("text"), lengths)).as("w"))
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val native = docs.select(col("text"),
+        explode(F.windowPos(col("text"), lengths)).as("wp"))
+      .select(col("text"), col("wp.phrase"), col("wp.pos"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
+    // one row per distinct window of a doc
+    assert(native.map(r => (r._1, r._2)).distinct.size == native.size)
+    // pos = 1-based token index of the window's first occurrence
+    for ((t, w, pos) <- native) {
+      val toks = Text.tokenize(t)
+      val n = w.split(' ').length
+      assert(toks.indices.find(i => toks.slice(i, i + n).mkString(" ") == w) == Some(pos - 1))
+    }
+    val viaNative = native.map(r => (r._1, r._2)).toSet
     val viaSlices = docs
       .withColumn("toks", F.tokenize(col("text")))
       .select(col("text"), explode(flatten(transform(

@@ -49,6 +49,48 @@ class GeocoderSpec extends SparkTestBase {
     assert(knnEvents.intersect(pipEvents).isEmpty)
   }
 
+  test("reverse: the containment chain is evaluated once per call") {
+    import spark.implicits._
+    // the country geometries are read only by the chain (the kNN fallback
+    // reads the place features), so the tap counts chain evaluations
+    val reads = spark.sparkContext.longAccumulator("country geometry reads")
+    val tap = udf { (wkb: Array[Byte]) => reads.add(1); wkb }
+    def rects(rs: Seq[(Long, Double, Double, Double, Double)]) =
+      rs.toDF("feature_id", "w", "s", "e", "n").select(col("feature_id"),
+        graft.functions.F.rectWkb(col("w"), col("s"), col("e"), col("n")).as("geom_wkb"),
+        ((col("w") + col("e")) / 2).as("flon"), ((col("s") + col("n")) / 2).as("flat"))
+    // a file scan, so the optimizer cannot fold the tap into a local relation
+    val dir = java.nio.file.Files.createTempDirectory("revonce").toString
+    rects(Seq((1L, 0.0, 0.0, 10.0, 10.0), (2L, 20.0, 0.0, 30.0, 10.0)))
+      .write.parquet(s"$dir/countries")
+    val countries = spark.read.parquet(s"$dir/countries")
+      .withColumn("geom_wkb", tap(col("geom_wkb")))
+    val places = rects(Seq((10L, 4.0, 4.0, 6.0, 6.0), (11L, 49.5, 4.5, 50.5, 5.5)))
+    // inside a country and a place; inside a country only; near place 11 only
+    val pts = Seq((1L, 5.0, 5.0), (2L, 25.0, 5.0), (3L, 52.0, 5.0))
+      .toDF("event_id", "elon", "elat")
+    val typed = Seq(("country", countries, 6), ("place", places, 8))
+    Geocode.contextChain(pts, typed).count()
+    val once = reads.value
+    reads.reset()
+    val out = Geocoder.default(spark).reverse(pts, typed).collect()
+    assert(out.exists(_.getString(3) == "knn"), "the kNN fallback must run")
+    assert(once > 0 && reads.value == once)
+  }
+
+  test("lang_fallback fails loudly on a language outside FallbackLangs") {
+    import spark.implicits._
+    import graft.queries.Queries
+    val dir = java.nio.file.Files.createTempDirectory("langfb").toString
+    Seq((1L, "data spark", "en"), (2L, "data spark", "xx"))
+      .toDF("doc_id", "text", "lang")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[Exception](Queries.langFallback(spark, dir).collect())
+    def msgs(t: Throwable): List[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) :: msgs(t.getCause)
+    assert(msgs(e).exists(_.contains("'xx'")), msgs(e).mkString(" | "))
+  }
+
   test("forward options: proximity override re-ranks; subtype scorerange filters") {
     import spark.implicits._
     val g = Geocoder.default(spark)
@@ -146,16 +188,10 @@ class GeocoderSpec extends SparkTestBase {
     assert(out.forall(r => allowed.contains(r.getLong(1))))
   }
 
-  test("Aho-Corasick mentions equal window mentions; handles 3+-token names") {
+  test("mentions finds 3- and 5-token names through the window join") {
     import spark.implicits._
-    val docs = Synth.docPages(spark, "/root/testdata/sf0.001")
-    val gaz = Synth.gazDf(spark)
-    val a = Geocode.mentions(docs, gaz).select("doc_id", "gid")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = Geocode.mentionsAC(docs, gaz).select("doc_id", "gid")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(a.nonEmpty && a == b)
-    // long names: both matchers must find the 3- and 4-token phrases
+    // the window length follows the longest name (maxNameTokens), so the
+    // 3- and 5-token phrases match as well as the 1-token one
     val longGaz = Seq(
       (1L, "new york city", "place", 5.0, 0.0, 0.0, "na"),
       (2L, "port of new york authority", "place", 4.0, 0.0, 0.0, "na"),
@@ -163,15 +199,8 @@ class GeocoderSpec extends SparkTestBase {
       .toDF("gid", "name", "typ", "score", "glon", "glat", "stack")
     val page = Seq((7L, "the port of new york authority runs new york city docks", 0.0, 0.0))
       .toDF("doc_id", "text", "qlon", "qlat")
-    // mentionsWindows is the raw window path: mentions() itself auto-switches
-    // to the automaton for maxNameTokens > 3, so the equivalence must be
-    // asserted against the explicit window baseline
-    val wa = Geocode.mentionsWindows(page, longGaz).select("gid").collect().map(_.getLong(0)).toSet
-    val ac = Geocode.mentionsAC(page, longGaz).select("gid").collect().map(_.getLong(0)).toSet
-    assert(wa == Set(1L, 2L, 3L) && ac == Set(1L, 2L, 3L))
-    // and the dispatching surface picks the automaton but stays row-identical
-    val auto = Geocode.mentions(page, longGaz).select("gid").collect().map(_.getLong(0)).toSet
-    assert(auto == wa)
+    val got = Geocode.mentions(page, longGaz).select("gid").collect().map(_.getLong(0)).toSet
+    assert(got == Set(1L, 2L, 3L))
   }
 
   test("F1 StackRegionCap: a doc mentioning >16 regions caps the stack side") {
